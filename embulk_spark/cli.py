@@ -35,6 +35,60 @@ def _add_common(sp: argparse.ArgumentParser) -> None:
     sp.add_argument("--master", default=None, help="spark master (default env/local)")
 
 
+#: --source-format values tailed by streaming/replay.py::stream_binlog
+_WIRE_FORMATS = ("debezium", "maxwell", "canal", "wal2json")
+
+
+def _replay_unsupported(args) -> str | None:
+    """Why the ``replay`` flags don't combine, or None — every flag the
+    chosen surface would otherwise ignore is refused, not dropped."""
+    followers = [
+        flag for flag, on in (
+            ("--signature-index", args.signature_index),
+            ("--bloom-index", args.bloom_index),
+            ("--term-index", args.term_index),
+            ("--agg-view", args.agg_view),
+            ("--export", args.export),
+        ) if on
+    ]
+    if args.agg_view and not args.agg_view_spec:
+        return "--agg-view requires --agg-view-spec"
+    if args.agg_view_spec and not args.agg_view:
+        return "--agg-view-spec requires --agg-view"
+    if args.route_catalog and not args.route:
+        return "--route-catalog requires --route"
+    if args.route:
+        bad = followers + [
+            flag for flag, on in (
+                ("--wap-rules", args.wap_rules),
+                ("--ref", args.ref != "main"),
+            ) if on
+        ]
+        if bad:
+            return f"--route does not support {', '.join(bad)}"
+        if args.checkpoint and args.route_catalog:
+            return ("--route-catalog is batch-mode only (atomic catalog "
+                    "flips per epoch); drop --checkpoint")
+        if args.checkpoint and args.source_format not in _WIRE_FORMATS:
+            return ("--route with --checkpoint requires a binlog "
+                    "--source-format (debezium|maxwell|canal|wal2json)")
+    if args.checkpoint:
+        if args.max_epochs is not None:
+            return "--max-epochs is batch-mode only; drop --checkpoint"
+        if args.source_format != "events":
+            bad = followers + (["--wap-rules"] if args.wap_rules else [])
+            if bad:
+                return (f"--source-format {args.source_format} does not "
+                        f"support {', '.join(bad)}")
+    elif args.source_format != "events":
+        return "--source-format needs --checkpoint (batch mode reads parquet)"
+    if args.txn_align and not (
+        args.checkpoint and args.source_format in ("wal2json", "maxwell")
+    ):
+        return "--txn-align needs --checkpoint with --source-format wal2json|maxwell"
+    return None
+
+
 def _cmd_example(base: str) -> int:
     """``example`` subcommand (reference cli/EmbulkExample.java): write a
     gzipped sample csv plus a seed config whose parser section is left
@@ -493,6 +547,8 @@ def main(argv: list[str] | None = None) -> int:
                     help="directory to create (default: embulk-example)")
 
     args = ap.parse_args(argv)
+    if args.cmd == "replay" and (why := _replay_unsupported(args)):
+        ap.error(why)
     if args.cmd == "example":
         # no Spark session needed: pure file generation
         return _cmd_example(args.path)
@@ -550,16 +606,6 @@ def main(argv: list[str] | None = None) -> int:
             if args.checkpoint:
                 # routed STREAMING tail: the envelope's own table tag
                 # routes each micro-batch (stream_binlog route mode)
-                if args.route_catalog:
-                    ap.error(
-                        "--route-catalog is batch-mode only (atomic "
-                        "catalog flips per epoch); drop --checkpoint"
-                    )
-                if args.source_format not in ("debezium", "maxwell", "canal", "wal2json"):
-                    ap.error(
-                        "--route with --checkpoint requires a binlog "
-                        "--source-format (debezium|maxwell|canal|wal2json)"
-                    )
                 from .streaming.replay import stream_binlog
 
                 stream_binlog(
@@ -617,48 +663,42 @@ def main(argv: list[str] | None = None) -> int:
         table = ParquetLakeTable(
             spark, args.table, n_buckets=args.buckets, ref=args.ref
         )
-        idx = None
+        followers = []
         if args.signature_index:
             from .operators.incremental import SignatureIndex
 
-            idx = SignatureIndex(
+            followers.append(SignatureIndex(
                 spark, args.signature_index, id_col="url", id_type="string",
                 order_cols=["warc_ts", "seq"],
-            )
-        bloom = None
+            ))
         if args.bloom_index:
             from .operators.bloom import BloomIndex
 
-            bloom = BloomIndex(spark, args.bloom_index)
-        tidx = None
+            followers.append(BloomIndex(spark, args.bloom_index))
         if args.term_index:
             from .operators.termindex import TermIndex
 
-            tidx = TermIndex(
+            followers.append(TermIndex(
                 spark, args.term_index, id_col="url", id_type="string",
                 order_cols=["warc_ts", "seq"],
                 order_types=["timestamp", "bigint"],
-            )
-        if args.export:
-            import os as _os
-
-            from .sinks.corpus import MANIFEST, export_from_lake
-
-            if not _os.path.exists(_os.path.join(args.export, MANIFEST)):
-                # bootstrap: seed the export from current table state
-                export_from_lake(spark, table, args.export)
-        aview = None
+            ))
         if args.agg_view:
             from .operators.aggview import AggView
 
-            if not args.agg_view_spec:
-                ap.error("--agg-view requires --agg-view-spec")
-            aview = AggView(spark, args.agg_view,
-                            **json.loads(args.agg_view_spec))
+            followers.append(AggView(spark, args.agg_view,
+                                     **json.loads(args.agg_view_spec)))
+        if args.export:
+            from .sinks.corpus import MANIFEST, CorpusExport, export_from_lake
+
+            if not os.path.exists(os.path.join(args.export, MANIFEST)):
+                # bootstrap: seed the export from current table state
+                export_from_lake(spark, table, args.export)
+            followers.append(CorpusExport(args.export))
         qrules = json.loads(args.quarantine_rules) if args.quarantine_rules else None
         wrules = json.loads(args.wap_rules) if args.wap_rules else None
         if args.checkpoint:
-            if args.source_format in ("debezium", "maxwell", "canal", "wal2json"):
+            if args.source_format in _WIRE_FORMATS:
                 from .streaming.replay import stream_binlog
 
                 stream_binlog(
@@ -676,16 +716,14 @@ def main(argv: list[str] | None = None) -> int:
             else:
                 stream_events(
                     spark, table, args.events, args.checkpoint,
-                    signature_index=idx, bloom_index=bloom, term_index=tidx,
-                    agg_view=aview, quarantine_rules=qrules, wap_rules=wrules,
+                    followers=followers, quarantine_rules=qrules,
+                    wap_rules=wrules,
                 )
         else:
             events = spark.read.parquet(args.events)
             metrics = replay_batches(
-                table, events, max_epochs=args.max_epochs, signature_index=idx,
-                bloom_index=bloom, term_index=tidx, agg_view=aview,
-                export_path=args.export,
-                quarantine_rules=qrules, wap_rules=wrules,
+                table, events, max_epochs=args.max_epochs,
+                followers=followers, quarantine_rules=qrules, wap_rules=wrules,
             )
             for m in metrics:
                 print(json.dumps(m, default=str))

@@ -17,10 +17,11 @@ at O(Δ + touched bucket slices) per epoch instead of O(table). Deletes
 retract (a group's count can reach 0 and the group vanishes); updates
 that move a row between groups retract from one and add to the other.
 
-Commit protocol: the same epoch-committed, idempotent, crash-self-healing
-lockstep as the MinHash/Bloom/term indexes (``deltas/epoch=N`` dirs,
-scratch→rename, duplicate delivery skips), so ``replay_batches(...,
-agg_view=…)`` and the streaming surface keep it in sync with the table.
+Commit protocol: the epoch-follower layout shared with the MinHash/Bloom/
+term indexes (operators/incremental.py::EpochDeltas — ``deltas/epoch=N``
+dirs, scratch→rename, duplicate delivery skips), so passing the view in
+``followers=`` of ``replay_batches``/``stream_events`` keeps it in sync
+with the table.
 
 Spec (group key + measures) is SQL strings pinned in ``meta.json`` —
 reopening with a different spec raises, exactly like BloomIndex.
@@ -38,8 +39,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .incremental import EpochDeltas
 
-class AggView:
+
+class AggView(EpochDeltas):
     def __init__(
         self,
         spark: SparkSession,
@@ -51,41 +54,18 @@ class AggView:
         measures: dict[str, str] | None = None,
         measure_type: str = "bigint",
     ) -> None:
+        super().__init__(path.rstrip("/"))
         self.spark = spark
-        self.path = path.rstrip("/")
         self.key_sql, self.key_name, self.key_type = key_sql, key_name, key_type
         self.measures = dict(measures or {})
         self.measures.setdefault("n_rows", "1")
         self.measure_type = measure_type
-        self._deltas = os.path.join(self.path, "deltas")
         self._base = os.path.join(self.path, "base")
-        os.makedirs(self._deltas, exist_ok=True)
-        meta_path = os.path.join(self.path, "meta.json")
-        meta = {
-            "key_sql": key_sql, "key_name": key_name, "key_type": key_type,
-            "measures": self.measures, "measure_type": measure_type,
-        }
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                existing = json.load(f)
-            if existing != meta:
-                raise ValueError(
-                    f"agg view at {path} was built with {existing}, "
-                    f"reopened with {meta}"
-                )
-        else:
-            tmp = meta_path + f".tmp{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(meta, f)
-            os.rename(tmp, meta_path)
-
-    # ------------------------------------------------------------------
-    def committed_epochs(self) -> set[int]:
-        return {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self._deltas)
-            if d.startswith("epoch=")
-        }
+        self._pin_meta(
+            {"key_sql": key_sql, "key_name": key_name, "key_type": key_type,
+             "measures": self.measures, "measure_type": measure_type},
+            "agg view",
+        )
 
     def _ddl(self) -> str:
         cols = [f"{self.key_name} {self.key_type}"]
@@ -121,7 +101,7 @@ class AggView:
         commit and this commit self-heals on resume (same contract as
         SignatureIndex.update_from_lake_epoch)."""
         if epoch in self.committed_epochs():
-            return {"epoch": epoch, "skipped_duplicate_epoch": True}
+            return self._skipped(epoch)
         # the snapshot this epoch's commit produced (pipelined epochs can
         # commit out of epoch order; per-VERSION deltas telescope exactly)
         v = None
@@ -137,21 +117,9 @@ class AggView:
                 f"no retained snapshot committed epoch {epoch} — expired? "
                 "rebuild the view from published() with rebuild()"
             )
-        if delta_dir is not None:
-            paths = [os.path.join(table.path, delta_dir)]
-        else:
-            snap_v = table.snapshot_at(v)
-            files = [
-                f for g in snap_v["deltas"]
-                if g.get("epoch_id") == epoch for f in g["files"]
-            ]
-            if not files:
-                raise ValueError(
-                    f"epoch {epoch}'s delta files left the current "
-                    "snapshot (compacted?) — rebuild the view with "
-                    "rebuild()"
-                )
-            paths = [os.path.join(table.path, f) for f in files]
+        paths = table.epoch_delta_paths(epoch, delta_dir=delta_dir, version=v)
+        if not paths:
+            return self.commit_empty_epoch(epoch)
         changed = self.spark.read.parquet(*paths).select("url", "bkt")
         bkts = sorted(
             r["bkt"] for r in changed.select("bkt").distinct().collect()
@@ -196,27 +164,12 @@ class AggView:
             cols.append(d.alias(m))
             nonzero = nonzero | (d != 0)
         delta = joined.select(*cols).filter(nonzero)
-        return self._commit_epoch(delta, epoch)
+        return self._commit_delta(delta, epoch)
 
-    def _commit_epoch(self, delta: DataFrame, epoch: int) -> dict:
-        scratch = os.path.join(
-            self.path, f"_tmp_epoch_{epoch}_{uuid.uuid4().hex}"
+    def _commit_delta(self, delta: DataFrame, epoch: int) -> dict:
+        return self._commit_epoch(
+            epoch, lambda scratch: delta.write.mode("overwrite").parquet(scratch)
         )
-        delta.write.mode("overwrite").parquet(scratch)
-        final = os.path.join(self._deltas, f"epoch={epoch}")
-        try:
-            os.rename(scratch, final)
-        except OSError:
-            shutil.rmtree(scratch, ignore_errors=True)
-            if not os.path.isdir(final):
-                raise
-        return {"epoch": epoch, "skipped_duplicate_epoch": False}
-
-    def commit_empty_epoch(self, epoch: int) -> dict:
-        if epoch in self.committed_epochs():
-            return {"epoch": epoch, "skipped_duplicate_epoch": True}
-        os.makedirs(os.path.join(self._deltas, f"epoch={epoch}"), exist_ok=True)
-        return {"epoch": epoch, "skipped_duplicate_epoch": False, "empty": True}
 
     # ------------------------------------------------------------------
     def _folded(self) -> dict | None:
@@ -361,7 +314,7 @@ class AggView:
         os.makedirs(self._deltas, exist_ok=True)
         rows = table.read()
         top = max(table.committed_epochs(), default=0)
-        out = self._commit_epoch(self._aggregate(rows), int(top))
+        out = self._commit_delta(self._aggregate(rows), int(top))
         # earlier epochs are folded into this baseline: mark them
         for e in sorted(table.committed_epochs()):
             if e != top:

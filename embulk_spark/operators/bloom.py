@@ -37,6 +37,8 @@ import uuid
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .incremental import EpochDeltas, _parquet_files
+
 
 def _position(value: Column, i: int, m_bits: int, salt: str) -> Column:
     """Bit position of hash i: first 15 md5 hex chars (60 bits) mod m."""
@@ -122,7 +124,7 @@ def bloom_probe(
 # CDC-native incremental index
 # ---------------------------------------------------------------------------
 
-class BloomIndex:
+class BloomIndex(EpochDeltas):
     """Persistent Bloom filter with the lake's epoch-commit semantics —
     the membership-set analogue of operators/incremental.py's
     SignatureIndex, kept in per-epoch lockstep with a lake table so
@@ -150,9 +152,8 @@ class BloomIndex:
     ground truth) — callers needing exact deletion semantics rebuild
     from the table, they don't mutate the filter.
 
-    Layout: ``<path>/deltas/epoch=N/*.parquet`` (word, bits) — an epoch
-    is committed iff its directory exists (atomic scratch-write +
-    ``os.rename``, empty dir = empty epoch). ``compact()`` folds
+    Layout: ``<path>/deltas/epoch=N/*.parquet`` (word, bits), committed
+    through operators/incremental.py::EpochDeltas. ``compact()`` folds
     data-bearing deltas into ``<path>/base`` and leaves empty marker
     dirs so the committed-epoch set (and dup-delivery skip) survives;
     ``meta.json`` pins (m_bits, k, salt) — filters from different
@@ -168,36 +169,16 @@ class BloomIndex:
         k: int = 5,
         salt: str = "bf",
     ) -> None:
+        super().__init__(path)
         self.spark = spark
-        self.path = path
         self.m_bits, self.k, self.salt = m_bits, k, salt
-        self._deltas = os.path.join(path, "deltas")
         self._base = os.path.join(path, "base")
-        os.makedirs(self._deltas, exist_ok=True)
-        meta_path = os.path.join(path, "meta.json")
-        meta = {"m_bits": m_bits, "k": k, "salt": salt, "word_bits": WORD_BITS}
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                existing = json.load(f)
-            if existing != meta:
-                raise ValueError(
-                    f"bloom index at {path} was built with {existing}, "
-                    f"reopened with {meta}"
-                )
-        else:
-            tmp = meta_path + f".tmp{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(meta, f)
-            os.rename(tmp, meta_path)
+        self._pin_meta(
+            {"m_bits": m_bits, "k": k, "salt": salt, "word_bits": WORD_BITS},
+            "bloom index",
+        )
 
     # ------------------------------------------------------------------
-    def committed_epochs(self) -> set[int]:
-        return {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self._deltas)
-            if d.startswith("epoch=")
-        }
-
     def _compaction_horizon(self) -> int | None:
         p = os.path.join(self._base, "_horizon.json")
         if not os.path.exists(p):
@@ -209,56 +190,16 @@ class BloomIndex:
         """Commit the epoch's word delta (the Δ values' bloom words only
         — ≤ min(k·Δ, m/63) rows). Duplicate delivery is skipped."""
         if epoch in self.committed_epochs():
-            return {"epoch": epoch, "skipped_duplicate_epoch": True}
+            return self._skipped(epoch)
         delta = bloom_build(
             changed, value_col, m_bits=self.m_bits, k=self.k, salt=self.salt
         )
-        scratch = os.path.join(self.path, f"_tmp_epoch_{epoch}_{uuid.uuid4().hex}")
-        delta.write.mode("overwrite").parquet(scratch)
-        final = os.path.join(self._deltas, f"epoch={epoch}")
-        try:
-            os.rename(scratch, final)
-        except OSError:
-            shutil.rmtree(scratch, ignore_errors=True)
-            if not os.path.isdir(final):
-                raise
-        return {"epoch": epoch, "skipped_duplicate_epoch": False}
+        return self._commit_epoch(
+            epoch, lambda scratch: delta.write.mode("overwrite").parquet(scratch)
+        )
 
-    def commit_empty_epoch(self, epoch: int) -> dict:
-        if epoch in self.committed_epochs():
-            return {"epoch": epoch, "skipped_duplicate_epoch": True}
-        os.makedirs(os.path.join(self._deltas, f"epoch={epoch}"), exist_ok=True)
-        return {"epoch": epoch, "skipped_duplicate_epoch": False, "empty": True}
-
-    def update_from_lake_epoch(
-        self, table, epoch: int, *, delta_dir: str | None = None
-    ) -> dict:
-        """Ingest a committed lake epoch's live texts — O(Δ) column-pruned
-        re-read of the epoch's delta files (deletes are add-only no-ops,
-        see class docstring). Same self-heal contract as
-        SignatureIndex.update_from_lake_epoch."""
-        if epoch in self.committed_epochs():
-            return {"epoch": epoch, "skipped_duplicate_epoch": True}
-        if delta_dir is not None:
-            paths = [os.path.join(table.path, delta_dir)]
-        else:
-            snap = table.current_snapshot()
-            files = [
-                f
-                for g in snap["deltas"]
-                if g.get("epoch_id") == epoch
-                for f in g["files"]
-            ]
-            if not files:
-                if epoch in table._empty_epochs():
-                    return self.commit_empty_epoch(epoch)
-                raise ValueError(
-                    f"epoch {epoch} has no delta files in the current "
-                    "snapshot (already compacted?) — rebuild the bloom "
-                    "index with a batch pass"
-                )
-            paths = [os.path.join(table.path, f) for f in files]
-        df = table.spark.read.parquet(*paths)
+    def _fold(self, df: DataFrame, epoch: int) -> dict:
+        # live texts only: deletes are add-only no-ops (class docstring)
         live = df.filter(~F.col("is_deleted")).select("text")
         return self.update_epoch(live, "text", epoch)
 
@@ -272,12 +213,7 @@ class BloomIndex:
                 f"as_of_epoch={as_of_epoch} predates the compaction "
                 f"horizon {horizon} — folded epochs cannot be re-split"
             )
-        paths = [
-            os.path.join(self._deltas, f"epoch={e}")
-            for e in sorted(self.committed_epochs())
-            if as_of_epoch is None or e <= as_of_epoch
-        ]
-        paths = [p for p in paths if _parquet_dir_nonempty(p)]
+        paths = self._data_dirs(as_of_epoch=as_of_epoch)
         if horizon is not None:
             paths.append(self._base)
         if not paths:
@@ -323,8 +259,8 @@ class BloomIndex:
         os.rename(scratch, self._base)
         folded = 0
         for e in epochs:
-            d = os.path.join(self._deltas, f"epoch={e}")
-            if _parquet_dir_nonempty(d):
+            d = self._epoch_dir(e)
+            if _parquet_files(d):
                 shutil.rmtree(d)
                 os.makedirs(d, exist_ok=True)
                 folded += 1
@@ -336,9 +272,3 @@ class BloomIndex:
         os.rename(tmp, os.path.join(self._base, "_horizon.json"))
         return {"folded": folded, "horizon": horizon}
 
-
-def _parquet_dir_nonempty(d: str) -> bool:
-    try:
-        return any(fn.endswith(".parquet") for fn in os.listdir(d))
-    except FileNotFoundError:
-        return False

@@ -212,7 +212,10 @@ def chunk_dedup_stats(
     ).select(
         id_col,
         "chunk_md5",
-        (F.col(id_col) * KEY_BASE + F.col("chunk_idx")).alias("okey"),
+        # widen first: an int id times KEY_BASE wraps 32-bit arithmetic
+        (F.col(id_col).cast("long") * KEY_BASE + F.col("chunk_idx")).alias(
+            "okey"
+        ),
         F.length("chunk").alias("chunk_len"),
     )
     keepers = occ.groupBy("chunk_md5").agg(F.min("okey").alias("keeper"))

@@ -33,18 +33,22 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .cdchunk import chunk_documents
+from .incremental import EpochDeltas
+
+_METRICS = "_metrics.json"
 
 
-class ChunkStore:
+class ChunkStore(EpochDeltas):
     """Persistent (chunk_md5, chunk_len, epoch) store with epoch-commit
-    semantics; ``epoch`` is the chunk's first-seen epoch."""
+    semantics (operators/incremental.py::EpochDeltas); ``epoch`` is the
+    chunk's first-seen epoch. Each data-bearing epoch dir carries the
+    epoch's dedup metrics in a ``_metrics.json`` sidecar, so a duplicate
+    delivery answers with the recorded metrics."""
 
     def __init__(
         self,
@@ -55,32 +59,23 @@ class ChunkStore:
         divisor: int = 64,
         salt: str = "cdcc:",
     ):
+        super().__init__(path)
         self.spark = spark
-        self.path = path
         self.window, self.divisor, self.salt = window, divisor, salt
-        self._deltas = os.path.join(path, "deltas")
-        os.makedirs(self._deltas, exist_ok=True)
 
-    def committed_epochs(self) -> set[int]:
-        return {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self._deltas)
-            if d.startswith("epoch=")
-        }
-
-    def _epoch_dirs(self, *, before: int | None = None) -> list[str]:
-        out = []
-        for e in sorted(self.committed_epochs()):
-            if before is not None and e >= before:
-                continue
-            out.append(os.path.join(self._deltas, f"epoch={e}"))
-        return out
+    def _skipped(self, epoch: int) -> dict:
+        mpath = os.path.join(self._epoch_dir(epoch), _METRICS)
+        if not os.path.exists(mpath):  # an epoch committed empty
+            return {"epoch": epoch, "chunks_seen": 0, "new_chunks": 0,
+                    "new_chars": 0, "dup_chunks": 0,
+                    "skipped_duplicate_epoch": True}
+        with open(mpath) as f:
+            return {**json.load(f), "skipped_duplicate_epoch": True}
 
     def chunks(self, *, as_of_epoch: int | None = None) -> DataFrame:
         """Stored (chunk_md5, chunk_len, epoch); hashes are unique by
         construction (an epoch commits only store-novel hashes)."""
-        before = None if as_of_epoch is None else as_of_epoch + 1
-        dirs = self._epoch_dirs(before=before)
+        dirs = self._data_dirs(as_of_epoch=as_of_epoch)
         if not dirs:
             return self.spark.createDataFrame(
                 [], "chunk_md5 string, chunk_len int, epoch int"
@@ -101,11 +96,8 @@ class ChunkStore:
         ``new_chars`` (stored), ``dup_chunks`` (occurrences answered by
         existing content — the transfer saving). Duplicate delivery of
         a committed epoch returns its recorded metrics unchanged."""
-        final = os.path.join(self._deltas, f"epoch={epoch}")
-        mpath = os.path.join(final, "_metrics.json")
         if epoch in self.committed_epochs():
-            with open(mpath) as f:
-                return {**json.load(f), "skipped_duplicate_epoch": True}
+            return self._skipped(epoch)
         occ = chunk_documents(
             docs,
             id_col=id_col,
@@ -129,10 +121,6 @@ class ChunkStore:
         # pin the novel set once: the write and the metrics agg must see
         # the SAME rows (and a scratch re-read would race the rename)
         novel = novel.localCheckpoint(eager=True)
-        scratch = os.path.join(
-            self.path, f"_tmp_epoch_{epoch}_{uuid.uuid4().hex}"
-        )
-        novel.write.mode("overwrite").parquet(scratch)
         row = novel.agg(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.sum("chunk_len"), F.lit(0)).alias("chars"),
@@ -144,65 +132,20 @@ class ChunkStore:
             "new_chars": int(row["chars"]),
             "dup_chunks": int(seen) - int(row["n"]),
         }
-        with open(os.path.join(scratch, "_metrics.json"), "w") as f:
-            json.dump(metrics, f)
-        try:
-            os.rename(scratch, final)  # atomic commit: dir exists = committed
-        except OSError:
-            shutil.rmtree(scratch, ignore_errors=True)
-            if not os.path.isdir(final):
-                raise
-            with open(mpath) as f:  # lost a benign concurrent commit
-                return {**json.load(f), "skipped_duplicate_epoch": True}
+
+        def write(scratch: str) -> None:
+            novel.write.mode("overwrite").parquet(scratch)
+            with open(os.path.join(scratch, _METRICS), "w") as f:
+                json.dump(metrics, f)
+
+        if self._commit_epoch(epoch, write)["skipped_duplicate_epoch"]:
+            return self._skipped(epoch)  # lost a benign concurrent commit
         return {**metrics, "skipped_duplicate_epoch": False}
 
-    def commit_empty_epoch(self, epoch: int) -> dict:
-        """Record an epoch that carried no change events, keeping
-        ``committed_epochs`` a contiguous replay cursor (the lockstep
-        protocol shared with SignatureIndex/BloomIndex/TermIndex)."""
-        empty = self.spark.createDataFrame([], "doc_id string, text string")
-        return self.ingest_epoch(empty, epoch)
-
-    def update_from_lake_epoch(
-        self, table, epoch: int, *, delta_dir: str | None = None
-    ) -> dict:
-        """Protocol alias — replay_batches syncs every side index
-        through this name (streaming/replay.py::_sync_signature_index)."""
-        return self.ingest_from_lake_epoch(table, epoch, delta_dir=delta_dir)
-
-    def ingest_from_lake_epoch(
-        self, table, epoch: int, *, delta_dir: str | None = None
-    ) -> dict:
-        """Ingest a committed lake epoch's delta files — the same O(Δ)
-        column-pruned re-read contract as SignatureIndex/TermIndex
-        (incremental.py:216): live rows chunk, tombstones are ignored
-        (a content-addressed store keeps chunks other documents may
-        share; document deletion is the lake's concern, byte
-        reclamation is refcount-GC's). On resume (store behind the
-        table after a crash between the two commits) files recover
-        from the snapshot's delta groups until compaction folds the
-        epoch — attach the store from the first epoch and resume
-        promptly, or rebuild with a batch pass."""
-        if epoch in self.committed_epochs():
-            mpath = os.path.join(
-                self._deltas, f"epoch={epoch}", "_metrics.json"
-            )
-            with open(mpath) as f:
-                return {**json.load(f), "skipped_duplicate_epoch": True}
-        if delta_dir is not None:
-            paths = [os.path.join(table.path, delta_dir)]
-        else:
-            snap = table.current_snapshot()
-            files = [
-                f
-                for g in snap["deltas"]
-                if g.get("epoch_id") == epoch
-                for f in g["files"]
-            ]
-            if not files:
-                return self.commit_empty_epoch(epoch)
-            paths = [os.path.join(table.path, f) for f in files]
-        df = table.spark.read.parquet(*paths)
+    def _fold(self, df: DataFrame, epoch: int) -> dict:
+        # live rows chunk; tombstones are ignored (a content-addressed
+        # store keeps chunks other documents may share; document deletion
+        # is the lake's concern, byte reclamation is refcount-GC's)
         live = df.filter(~F.col("is_deleted")).select(
             F.col("url").alias("doc_id"), "text"
         )

@@ -36,6 +36,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..streaming.lake_util import swap_leftover_base
 from .dedup import banded_signatures, minhash_df
 
 _TOMBSTONE_SCHEMA = "array<bigint>"
@@ -48,20 +49,125 @@ def _parquet_files(d: str) -> list[str]:
         return []
 
 
-def _lake_epoch_was_empty(table, epoch: int) -> bool:
-    """True iff the table committed ``epoch`` as an empty batch — one
-    source of truth: the table's own snapshot-metrics scan
-    (streaming/lake.py::_empty_epochs)."""
-    return epoch in table._empty_epochs()
+class EpochDeltas:
+    """The on-disk epoch layout every lake follower shares (SignatureIndex
+    here; BloomIndex, TermIndex, AggView, ChunkStore): ``<path>/deltas/
+    epoch=N`` — an epoch is committed iff its directory exists, made
+    atomic by filling a scratch dir and ``os.rename``-ing it into place;
+    a bare directory is an epoch committed empty.
+
+    Together with ``update_from_lake_epoch(table, epoch, *, delta_dir=None)``
+    (``ParquetLakeTable.epoch_delta_paths`` finds the epoch's files) this
+    is the follower protocol ``replay_batches``/``stream_events`` drive
+    through ``followers=``. Every commit is idempotent per epoch, so a
+    crash between the table commit and a follower's commit self-heals on
+    resume (reference analogue: re-run only tasks without a committed
+    report, exec/BulkLoader.java:584-690). Subclasses implement
+    ``_fold(df, epoch)`` over the epoch's delta rows."""
+
+    def __init__(self, path: str) -> None:
+        self.path = path
+        self._deltas = os.path.join(path, "deltas")
+        os.makedirs(self._deltas, exist_ok=True)
+
+    def _pin_meta(self, meta: dict, what: str) -> None:
+        """Pin the follower's on-disk format in ``meta.json``: reopening
+        with different settings raises instead of mixing conventions."""
+        meta_path = os.path.join(self.path, "meta.json")
+        if os.path.exists(meta_path):
+            with open(meta_path) as f:
+                existing = json.load(f)
+            if existing != meta:
+                raise ValueError(
+                    f"{what} at {self.path} was built with {existing}, "
+                    f"reopened with {meta} — refusing to mix conventions"
+                )
+            return
+        tmp = meta_path + f".tmp{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
+            json.dump(meta, f)
+        os.rename(tmp, meta_path)
+
+    def _epoch_dir(self, epoch: int) -> str:
+        return os.path.join(self._deltas, f"epoch={epoch}")
+
+    def committed_epochs(self) -> set[int]:
+        # a crashed purge swap can leave only ``epoch=N.old<hex>`` behind
+        # (purge_epoch_dirs heals it): the epoch is still committed
+        return {
+            int(swap_leftover_base(d).split("=", 1)[1])
+            for d in os.listdir(self._deltas)
+            if d.startswith("epoch=")
+        }
+
+    def _skipped(self, epoch: int) -> dict:
+        """Result of a duplicate delivery of a committed epoch."""
+        return {"epoch": epoch, "skipped_duplicate_epoch": True}
+
+    def commit_empty_epoch(self, epoch: int) -> dict:
+        """Commit an epoch with no changes (keeps the follower's epoch set
+        aligned with the table's for empty batches): a bare marker dir,
+        which the readers skip (``_data_dirs``)."""
+        if epoch in self.committed_epochs():
+            return self._skipped(epoch)
+        os.makedirs(self._epoch_dir(epoch), exist_ok=True)
+        return {"epoch": epoch, "skipped_duplicate_epoch": False, "empty": True}
+
+    def _commit_epoch(self, epoch: int, write) -> dict:
+        """``write(scratch)`` fills a scratch dir that then renames to
+        ``epoch=N``. Losing the rename to a concurrent writer of the same
+        epoch reports a skipped duplicate — benign, epoch contents are
+        deterministic; any other rename failure (EXDEV, EACCES, ...)
+        raises instead of faking success."""
+        scratch = os.path.join(
+            self.path, f"_tmp_epoch_{epoch}_{uuid.uuid4().hex}"
+        )
+        write(scratch)
+        final = self._epoch_dir(epoch)
+        try:
+            os.rename(scratch, final)  # atomic commit: dir exists = committed
+        except OSError:
+            shutil.rmtree(scratch, ignore_errors=True)
+            if not os.path.isdir(final):
+                raise
+            return self._skipped(epoch)
+        return {"epoch": epoch, "skipped_duplicate_epoch": False}
+
+    def _data_dirs(self, *, as_of_epoch: int | None = None) -> list[str]:
+        """Committed epoch dirs (up to ``as_of_epoch``) holding parquet
+        files, in epoch order — the parquet reader cannot infer a schema
+        from an empty-epoch marker."""
+        dirs = [
+            self._epoch_dir(e)
+            for e in sorted(self.committed_epochs())
+            if as_of_epoch is None or e <= as_of_epoch
+        ]
+        return [d for d in dirs if _parquet_files(d)]
+
+    def update_from_lake_epoch(
+        self, table, epoch: int, *, delta_dir: str | None = None
+    ) -> dict:
+        """Fold a committed lake epoch — an O(Δ) column-pruned re-read of
+        its delta files; the extraction is never recomputed.
+        ``delta_dir`` comes from the commit metrics; without it (resume
+        with the follower behind the table) the files come from the
+        snapshot, which works until compaction folds the epoch — attach
+        the follower from the first epoch and resume promptly, or
+        rebuild it with a batch pass."""
+        if epoch in self.committed_epochs():
+            return self._skipped(epoch)
+        paths = table.epoch_delta_paths(epoch, delta_dir=delta_dir)
+        if not paths:
+            return self.commit_empty_epoch(epoch)
+        return self._fold(table.spark.read.parquet(*paths), epoch)
 
 
-class SignatureIndex:
+class SignatureIndex(EpochDeltas):
     """Persistent per-key MinHash signatures with epoch-commit semantics.
 
     Layout: ``<path>/deltas/epoch=N/*.parquet`` (columns id, sig;
-    sig NULL = tombstone) — an epoch is committed iff its directory
-    exists, made atomic by writing to a scratch dir and ``os.rename``-ing
-    it into place. ``<path>/meta.json`` pins (id_col, id_type, k, bands,
+    sig NULL = tombstone), committed through :class:`EpochDeltas`.
+    ``<path>/meta.json`` pins (id_col, id_type, k, bands,
     shingle_n) AND the exact minhash permutation constants (P, a_i, b_i)
     so a resumed handle can't silently mix permutation families —
     old-family deltas would band-hash to disjoint buckets and miss every
@@ -89,15 +195,12 @@ class SignatureIndex:
         events, because the lake resolves winners by event order, not
         arrival epoch; a late update must not supersede. Without them,
         the highest epoch wins (fine for append-only corpora)."""
+        super().__init__(path)
         self.spark = spark
-        self.path = path
         self.id_col = id_col
         self.id_type = id_type
         self.k, self.bands, self.shingle_n = k, bands, shingle_n
         self.order_cols = list(order_cols or [])
-        self._deltas = os.path.join(path, "deltas")
-        os.makedirs(self._deltas, exist_ok=True)
-        meta_path = os.path.join(path, "meta.json")
         # the permutation family is part of the on-disk format: signatures
         # from different (P, a_i, b_i) constants band-hash to disjoint
         # buckets, so mixing families silently misses every near-dup pair.
@@ -105,31 +208,14 @@ class SignatureIndex:
         from .dedup import MINHASH_P, minhash_params
 
         a, b = minhash_params(k)
-        meta = {"id_col": id_col, "id_type": id_type, "k": k, "bands": bands,
-                "shingle_n": shingle_n, "order_cols": self.order_cols,
-                "minhash_family": [MINHASH_P, a, b]}
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                existing = json.load(f)
-            if existing != meta:
-                raise ValueError(
-                    f"signature index at {path} was built with {existing}, "
-                    f"reopened with {meta}"
-                )
-        else:
-            tmp = meta_path + f".tmp{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(meta, f)
-            os.rename(tmp, meta_path)
+        self._pin_meta(
+            {"id_col": id_col, "id_type": id_type, "k": k, "bands": bands,
+             "shingle_n": shingle_n, "order_cols": self.order_cols,
+             "minhash_family": [MINHASH_P, a, b]},
+            "signature index",
+        )
 
     # ------------------------------------------------------------------
-    def committed_epochs(self) -> set[int]:
-        return {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self._deltas)
-            if d.startswith("epoch=")
-        }
-
     def update_epoch(
         self,
         changed: DataFrame,
@@ -143,7 +229,7 @@ class SignatureIndex:
         ``deleted_ids`` (ids plus the configured ``order_cols``) become
         tombstones. Duplicate delivery of a committed epoch is skipped."""
         if epoch in self.committed_epochs():
-            return {"epoch": epoch, "skipped_duplicate_epoch": True}
+            return self._skipped(epoch)
         got_type = changed.schema[self.id_col].dataType.simpleString()
         if got_type != self.id_type:
             raise ValueError(
@@ -182,19 +268,9 @@ class SignatureIndex:
         sigs = sigs.unionByName(unsigged.select(*tombstone_cols))
         if deleted_ids is not None:
             sigs = sigs.unionByName(deleted_ids.select(*tombstone_cols))
-        scratch = os.path.join(self.path, f"_tmp_epoch_{epoch}_{uuid.uuid4().hex}")
-        sigs.write.mode("overwrite").parquet(scratch)
-        final = os.path.join(self._deltas, f"epoch={epoch}")
-        try:
-            os.rename(scratch, final)  # atomic commit: dir exists = committed
-        except OSError:
-            shutil.rmtree(scratch, ignore_errors=True)
-            if not os.path.isdir(final):
-                # NOT the benign lost-a-concurrent-commit race (where the
-                # other writer's deterministic signatures are equal) —
-                # surface EXDEV/EACCES/... instead of faking success
-                raise
-        return {"epoch": epoch, "skipped_duplicate_epoch": False}
+        return self._commit_epoch(
+            epoch, lambda scratch: sigs.write.mode("overwrite").parquet(scratch)
+        )
 
     def purge_ids(self, ids: list) -> dict:
         """Compliance purge: every stored signature row of the ids leaves
@@ -203,48 +279,7 @@ class SignatureIndex:
         eps = purge_epoch_dirs(self.spark, self._deltas, ids, self.id_col)
         return {"epochs_rewritten": eps, "ids": len(ids)}
 
-    def commit_empty_epoch(self, epoch: int) -> dict:
-        """Mark an epoch with no signature changes committed (keeps the
-        index's epoch set aligned with the table's for empty batches).
-        An empty delta directory is a valid committed epoch: the
-        multi-path read infers its schema from the non-empty ones."""
-        if epoch in self.committed_epochs():
-            return {"epoch": epoch, "skipped_duplicate_epoch": True}
-        os.makedirs(os.path.join(self._deltas, f"epoch={epoch}"), exist_ok=True)
-        return {"epoch": epoch, "skipped_duplicate_epoch": False, "empty": True}
-
-    def update_from_lake_epoch(
-        self, table, epoch: int, *, delta_dir: str | None = None
-    ) -> dict:
-        """Update from a committed lake epoch's delta files — an O(Δ)
-        column-pruned re-read of (url, text, is_deleted); the extraction
-        is never recomputed. ``delta_dir`` comes from the commit metrics;
-        on resume (index behind the table after a crash between the two
-        commits) the files are recovered from the snapshot's delta
-        groups, which works until compaction folds that epoch — attach
-        the index from the first epoch and resume promptly, or rebuild
-        via a batch pass."""
-        if epoch in self.committed_epochs():
-            return {"epoch": epoch, "skipped_duplicate_epoch": True}
-        if delta_dir is not None:
-            paths = [os.path.join(table.path, delta_dir)]
-        else:
-            snap = table.current_snapshot()
-            files = [
-                f
-                for g in snap["deltas"]
-                if g.get("epoch_id") == epoch
-                for f in g["files"]
-            ]
-            if not files:
-                if _lake_epoch_was_empty(table, epoch):
-                    return self.commit_empty_epoch(epoch)
-                raise ValueError(
-                    f"epoch {epoch} has no delta files in the current snapshot "
-                    "(already compacted?) — rebuild the index with a batch pass"
-                )
-            paths = [os.path.join(table.path, f) for f in files]
-        df = table.spark.read.parquet(*paths)
+    def _fold(self, df: DataFrame, epoch: int) -> dict:
         missing = [c for c in self.order_cols if c not in df.columns]
         if missing:
             raise ValueError(
@@ -265,14 +300,7 @@ class SignatureIndex:
         """Latest live signature per key (tombstones dropped), optionally
         as of an epoch — one max_by hash agg with partial combine, the
         same merge-on-read shape as the lake read path."""
-        paths = [
-            os.path.join(self._deltas, f"epoch={e}")
-            for e in sorted(self.committed_epochs())
-            if as_of_epoch is None or e <= as_of_epoch
-        ]
-        # empty-batch epochs commit a bare directory; the parquet reader
-        # cannot infer a schema from zero files, so keep data-bearing dirs
-        paths = [p for p in paths if _parquet_files(p)]
+        paths = self._data_dirs(as_of_epoch=as_of_epoch)
         if not paths:
             # nothing signed yet (only empty epochs so far): a typed empty
             # frame — the id type is pinned in meta, so downstream unions
@@ -299,7 +327,7 @@ class SignatureIndex:
         estimated from the signatures carried through the join. Pairs
         are normalized (id_a < id_b) and distinct."""
         corpus = self.signatures(as_of_epoch=epoch).localCheckpoint(eager=True)
-        epoch_dir = os.path.join(self._deltas, f"epoch={epoch}")
+        epoch_dir = self._epoch_dir(epoch)
         if not _parquet_files(epoch_dir):
             # empty-batch epoch: no change-set, no new pairs
             ident = F.col(self.id_col)

@@ -84,11 +84,11 @@ def kmv_overlap(
         *[F.col(c).alias(f"{c}_2") for c in group_cols],
         F.col("sketch").alias("sk2"),
     )
-    cond = None
-    for c in group_cols:
-        lt = F.col(f"{c}_1") < F.col(f"{c}_2")
-        cond = lt if cond is None else cond & lt
-    j = a.join(b, cond)
+    # lexicographic order over the whole group key (same field names on
+    # both sides: struct comparison needs identical types)
+    g1 = F.struct(*[F.col(f"{c}_1").alias(c) for c in group_cols])
+    g2 = F.struct(*[F.col(f"{c}_2").alias(c) for c in group_cols])
+    j = a.join(b, g1 < g2)
     merged = F.slice(
         F.array_sort(F.array_distinct(F.concat("sk1", "sk2"))), 1, k
     )

@@ -30,31 +30,19 @@ whitespace split), the same "word" dedup and BM25 agree on.
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .incremental import EpochDeltas, purge_epoch_dirs
 from .retrieval import TOKENS_EXPR
 
 
-def _parquet_files(d: str) -> list[str]:
-    try:
-        return [fn for fn in os.listdir(d) if fn.endswith(".parquet")]
-    except FileNotFoundError:
-        return []
-
-
-class TermIndex:
+class TermIndex(EpochDeltas):
     """Persistent per-document term stats with epoch-commit semantics.
 
     Layout: ``<path>/deltas/epoch=N/*.parquet`` (columns id, term, tf,
-    dl [, order_cols]; term NULL = tombstone) — an epoch is committed
-    iff its directory exists, made atomic by writing to a scratch dir
-    and ``os.rename``-ing it into place. ``<path>/meta.json`` pins
+    dl [, order_cols]; term NULL = tombstone), committed through
+    operators/incremental.py::EpochDeltas. ``<path>/meta.json`` pins
     (id_col, id_type, order_cols) so a resumed handle types empty
     frames consistently and can't silently change the winner rule.
 
@@ -75,11 +63,8 @@ class TermIndex:
         order_cols: list[str] | None = None,
         order_types: list[str] | None = None,
     ) -> None:
+        super().__init__(path.rstrip("/"))
         self.spark = spark
-        self.path = path.rstrip("/")
-        self._deltas = os.path.join(self.path, "deltas")
-        os.makedirs(self._deltas, exist_ok=True)
-        meta_path = os.path.join(self.path, "meta.json")
         order_cols = list(order_cols or [])
         order_types = list(
             order_types if order_types is not None
@@ -87,39 +72,18 @@ class TermIndex:
         )
         if len(order_types) != len(order_cols):
             raise ValueError("order_types must pair 1:1 with order_cols")
-        meta = {"id_col": id_col, "id_type": id_type,
-                "order_cols": order_cols, "order_types": order_types,
-                "tokens": "v1"}
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                stored = json.load(f)
-            if stored != meta:
-                raise ValueError(
-                    f"term index at {self.path} was created with {stored}, "
-                    f"reopened with {meta} — refusing to mix conventions"
-                )
-        else:
-            with open(meta_path, "w") as f:
-                json.dump(meta, f)
+        self._pin_meta(
+            {"id_col": id_col, "id_type": id_type,
+             "order_cols": order_cols, "order_types": order_types,
+             "tokens": "v1"},
+            "term index",
+        )
         self.id_col = id_col
         self.id_type = id_type
         self.order_cols = order_cols
         self.order_types = order_types
 
     # ------------------------------------------------------------------
-    def _epoch_dir(self, epoch: int) -> str:
-        return os.path.join(self._deltas, f"epoch={epoch}")
-
-    def committed_epochs(self) -> set[int]:
-        try:
-            return {
-                int(d.split("=")[1])
-                for d in os.listdir(self._deltas)
-                if d.startswith("epoch=")
-            }
-        except FileNotFoundError:
-            return set()
-
     def update_epoch(
         self, docs: DataFrame, text_col: str, epoch: int
     ) -> dict:
@@ -131,7 +95,7 @@ class TermIndex:
         count — the only shuffle is onto the epoch's own (tiny) term
         rows."""
         if epoch in self.committed_epochs():
-            return {"epoch": epoch, "skipped_duplicate_epoch": True}
+            return self._skipped(epoch)
         missing = [c for c in self.order_cols if c not in docs.columns]
         if missing:
             raise ValueError(
@@ -173,67 +137,18 @@ class TermIndex:
         rows = live.select(
             "id", *self.order_cols, "term", "tf", "dl"
         ).unionByName(empty).unionByName(dead)
-        scratch = os.path.join(self.path, f"_scratch_{uuid.uuid4().hex[:8]}")
-        rows.write.mode("overwrite").parquet(scratch)
-        target = self._epoch_dir(epoch)
-        try:
-            os.rename(scratch, target)  # atomic commit
-        except OSError:
-            shutil.rmtree(scratch, ignore_errors=True)
-            if os.path.exists(target):  # lost the race: equivalent files
-                return {"epoch": epoch, "skipped_duplicate_epoch": True}
-            raise
-        return {"epoch": epoch, "committed": True}
+        return self._commit_epoch(
+            epoch, lambda scratch: rows.write.mode("overwrite").parquet(scratch)
+        )
 
     def purge_ids(self, ids: list) -> dict:
         """Compliance purge: every stored (id, term, tf) row of the ids
         leaves the index (incremental.purge_epoch_dirs); run after
         ``lake.purge_keys`` on the upstream table."""
-        from .incremental import purge_epoch_dirs
-
         eps = purge_epoch_dirs(self.spark, self._deltas, ids)
         return {"epochs_rewritten": eps, "ids": len(ids)}
 
-    def commit_empty_epoch(self, epoch: int) -> dict:
-        """Mark an epoch with no document changes committed (keeps the
-        index's epoch set aligned with the table's for empty batches)."""
-        if epoch in self.committed_epochs():
-            return {"epoch": epoch, "skipped_duplicate_epoch": True}
-        os.makedirs(self._epoch_dir(epoch), exist_ok=True)
-        return {"epoch": epoch, "skipped_duplicate_epoch": False, "empty": True}
-
-    def update_from_lake_epoch(
-        self, table, epoch: int, *, delta_dir: str | None = None
-    ) -> dict:
-        """Update from a committed lake epoch's delta files — an O(Δ)
-        column-pruned re-read of (url, text, is_deleted); extraction is
-        never recomputed. Speaks the same sync protocol as
-        operators/incremental.py::SignatureIndex, so
-        ``replay_batches(term_index=...)`` keeps table and retrieval
-        index in per-epoch lockstep (crash between the two commits
-        self-heals: both sides' epoch commits are idempotent)."""
-        if epoch in self.committed_epochs():
-            return {"epoch": epoch, "skipped_duplicate_epoch": True}
-        if delta_dir is not None:
-            paths = [os.path.join(table.path, delta_dir)]
-        else:
-            snap = table.current_snapshot()
-            files = [
-                f
-                for g in snap["deltas"]
-                if g.get("epoch_id") == epoch
-                for f in g["files"]
-            ]
-            if not files:
-                if epoch in table._empty_epochs():
-                    return self.commit_empty_epoch(epoch)
-                raise ValueError(
-                    f"epoch {epoch} has no delta files in the current "
-                    "snapshot (already compacted?) — rebuild the index "
-                    "with a batch pass"
-                )
-            paths = [os.path.join(table.path, f) for f in files]
-        df = table.spark.read.parquet(*paths)
+    def _fold(self, df: DataFrame, epoch: int) -> dict:
         docs = df.select(
             F.col("url").alias(self.id_col),
             *self.order_cols,
@@ -245,20 +160,13 @@ class TermIndex:
 
     # ------------------------------------------------------------------
     def _rows(self, as_of_epoch: int | None) -> DataFrame:
-        epochs = sorted(self.committed_epochs())
-        if as_of_epoch is not None:
-            epochs = [e for e in epochs if e <= as_of_epoch]
-        if not epochs:
+        dirs = self._data_dirs(as_of_epoch=as_of_epoch)
+        if not dirs:
+            # no epochs, or only empty ones: no files to infer a schema from
             return self.spark.createDataFrame([], self._ddl())
-        dirs = [self._epoch_dir(e) for e in epochs]
-        try:
-            return self.spark.read.option("basePath", self._deltas).parquet(
-                *dirs
-            ).withColumn("epoch", F.col("epoch").cast("int"))
-        except Exception:
-            # every committed epoch so far was empty: no files to infer
-            # a schema from — same contract as an index with no epochs
-            return self.spark.createDataFrame([], self._ddl())
+        return self.spark.read.option("basePath", self._deltas).parquet(
+            *dirs
+        ).withColumn("epoch", F.col("epoch").cast("int"))
 
     def _winner_key(self):
         return F.struct(

@@ -33,6 +33,7 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+import threading
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -298,10 +299,7 @@ def refresh_corpus_shards(
     manifest["total_rows"] = sum(s["rows"] for s in manifest["shards"])
     manifest["total_tokens"] = sum(s["n_tokens"] for s in manifest["shards"])
     manifest["version"] = int(manifest.get("version", 0)) + 1
-    fd, tmp = tempfile.mkstemp(dir=path, prefix="._manifest.")
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, mpath)
+    _write_manifest(path, manifest)
     return manifest
 
 
@@ -345,6 +343,19 @@ def export_from_lake(
     return _commit_tombstones(spark, path, manifest, tomb, list(version_cols))
 
 
+def _write_manifest(path: str, manifest: dict) -> None:
+    """Replace the manifest atomically (write-aside + rename)."""
+    fd, tmp = tempfile.mkstemp(dir=path, prefix="._manifest.")
+    with os.fdopen(fd, "w") as f:
+        json.dump(manifest, f, indent=1, sort_keys=True)
+    os.replace(tmp, os.path.join(path, MANIFEST))
+
+
+def _mark_synced(manifest: dict, epoch: int) -> None:
+    manifest.setdefault("synced_epochs", []).append(int(epoch))
+    manifest["synced_epochs"].sort()
+
+
 def _tombstone_dir(manifest: dict) -> str | None:
     return manifest.get("tombstones")
 
@@ -358,10 +369,7 @@ def _commit_tombstones(spark, path, manifest, tomb, version_cols) -> dict:
     tomb.write.mode("overwrite").parquet(os.path.join(path, rel))
     manifest["tombstones"] = rel
     manifest["version_cols"] = version_cols
-    fd, tmp = tempfile.mkstemp(dir=path, prefix="._manifest.")
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(path, MANIFEST))
+    _write_manifest(path, manifest)
     troot = os.path.join(path, TOMBSTONES)
     for d in os.listdir(troot):
         if d != os.path.basename(rel):
@@ -421,12 +429,8 @@ def refresh_from_changes(
     if not changed_ids.head(1):
         # empty feed range: no shard work, but the cursor still advances
         if mark_epoch is not None:
-            manifest.setdefault("synced_epochs", []).append(int(mark_epoch))
-            manifest["synced_epochs"].sort()
-            fd, tmp = tempfile.mkstemp(dir=path, prefix="._manifest.")
-            with os.fdopen(fd, "w") as f:
-                json.dump(manifest, f, indent=1, sort_keys=True)
-            os.replace(tmp, os.path.join(path, MANIFEST))
+            _mark_synced(manifest, mark_epoch)
+            _write_manifest(path, manifest)
         return manifest
     feed_cols = [c for c in old.columns if c in changes.columns]
 
@@ -471,10 +475,65 @@ def refresh_from_changes(
         spark, path, upserts=live, deletes=gone.select(id_col)
     )
     if mark_epoch is not None:
-        manifest.setdefault("synced_epochs", []).append(int(mark_epoch))
-        manifest["synced_epochs"].sort()
+        _mark_synced(manifest, mark_epoch)
     new_tomb = tomb.join(changed_ids, id_col, "left_anti").unionByName(gone)
     return _commit_tombstones(spark, path, manifest, new_tomb, version_cols)
+
+
+class CorpusExport:
+    """An export (created by :func:`export_from_lake`) as a lake follower:
+    pass it in ``followers=`` of ``streaming/replay.py::replay_batches`` /
+    ``stream_events`` and each committed epoch's change-set folds in
+    (O(Δ + affected shards)) — a live training corpus synced to the WAL.
+
+    The manifest's ``synced_epochs`` is the follower's committed-epoch
+    set, so a crash between the table commit and the export sync
+    self-heals on replay. The lock serializes pipelined epochs onto the
+    single-writer manifest (apply order doesn't matter — resolution is a
+    pure max over versions — but concurrent manifest writes would)."""
+
+    def __init__(self, path: str) -> None:
+        self.path = path
+        self._lock = threading.Lock()
+
+    def _manifest(self) -> dict:
+        with open(os.path.join(self.path, MANIFEST)) as f:
+            return json.load(f)
+
+    def committed_epochs(self) -> set[int]:
+        if not os.path.exists(os.path.join(self.path, MANIFEST)):
+            return set()
+        return {int(e) for e in self._manifest().get("synced_epochs", [])}
+
+    def commit_empty_epoch(self, epoch: int) -> dict:
+        with self._lock:
+            manifest = self._manifest()
+            if epoch in manifest.get("synced_epochs", []):
+                return {"epoch": epoch, "skipped_duplicate_epoch": True}
+            _mark_synced(manifest, epoch)
+            _write_manifest(self.path, manifest)
+        return {"epoch": epoch, "skipped_duplicate_epoch": False, "empty": True}
+
+    def update_from_lake_epoch(
+        self, table, epoch: int, *, delta_dir: str | None = None
+    ) -> dict:
+        """Fold the epoch in. A fresh commit passes its ``delta_dir`` —
+        in-loop compaction may fold the epoch out of the snapshot before
+        this sync runs. Without it (the export lags the table after a
+        crash) the change feed serves the epoch: it also normalizes
+        renamed columns, which delta files carry under their write-time
+        names, and raises once compaction folded the epoch."""
+        with self._lock:
+            if epoch in self.committed_epochs():
+                return {"epoch": epoch, "skipped_duplicate_epoch": True}
+            if delta_dir is not None:
+                feed = table.spark.read.parquet(
+                    *table.epoch_delta_paths(epoch, delta_dir=delta_dir)
+                )
+            else:
+                feed = table.changes_between(epoch - 1, epoch)
+            refresh_from_changes(table.spark, self.path, feed, mark_epoch=epoch)
+        return {"epoch": epoch, "skipped_duplicate_epoch": False}
 
 
 def purge_corpus_keys(spark, path: str, ids: list) -> dict:

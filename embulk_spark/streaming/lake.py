@@ -383,6 +383,41 @@ class ParquetLakeTable(ScanPlanMixin, CompactionMixin, MaintenanceMixin):
         snap = self.current_snapshot()
         return set(snap["committed_epochs"]) if snap else set()
 
+    def epoch_delta_paths(
+        self,
+        epoch: int,
+        *,
+        delta_dir: str | None = None,
+        version: int | None = None,
+    ) -> list[str]:
+        """The files holding committed epoch ``epoch``'s change-set — the
+        one lookup every lake follower (operators/incremental.py::
+        EpochDeltas, sinks/corpus.py::CorpusExport) syncs from.
+        ``delta_dir`` (from the commit metrics) is returned as is;
+        otherwise the delta groups of snapshot ``version`` (default: the
+        current one) tagged with the epoch. ``[]`` means the epoch was
+        committed empty. Raises when the epoch's files are gone from the
+        snapshot — folded by compaction, or never committed — so a
+        follower never commits a lost epoch as empty."""
+        if delta_dir is not None:
+            return [os.path.join(self.path, delta_dir)]
+        snap = self.current_snapshot() if version is None \
+            else self.snapshot_at(version)
+        files = [
+            f
+            for g in (snap["deltas"] if snap else [])
+            if g.get("epoch_id") == epoch
+            for f in g["files"]
+        ]
+        if files:
+            return [os.path.join(self.path, f) for f in files]
+        if epoch in self._empty_epochs():
+            return []
+        raise ValueError(
+            f"epoch {epoch} has no delta files in the snapshot (already "
+            "compacted?) — rebuild the follower with a batch pass"
+        )
+
     def metrics_history(self) -> list[dict]:
         """Every retained snapshot's commit metrics in version order —
         the monitoring feed (rows/dedup/watermark-lag per commit,

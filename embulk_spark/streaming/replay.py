@@ -25,7 +25,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -206,6 +205,68 @@ def requeue_quarantined(
     return out
 
 
+def _apply_ddl(table: ParquetLakeTable, epoch_df: DataFrame) -> DataFrame:
+    """Apply the epoch's schema-change events as table DDL (driver-side,
+    tiny, in seq order) and return its data events."""
+    rows = (
+        epoch_df.filter(F.col("op") == "S")
+        .select("seq", "schema_change")
+        .collect()
+    )
+    _apply_schema_rows(table, rows)
+    return epoch_df.filter(F.col("op") != "S")
+
+
+def _apply_schema_rows(table: ParquetLakeTable, rows) -> None:
+    for row in sorted(rows, key=lambda r: r["seq"]):
+        if row["schema_change"]:
+            apply_schema_change(table, row["schema_change"])
+
+
+def _commit_epoch(
+    table: ParquetLakeTable,
+    data: DataFrame,
+    epoch_id: int,
+    quarantine_rules: list[dict] | None,
+    wap_rules: list[dict] | None,
+    merge=None,
+) -> dict:
+    """The per-epoch body after DDL, shared by every surface: quarantine
+    → WAP-or-merge. ``merge`` replaces the commit (catalog
+    transactions)."""
+    n_bad = 0
+    if quarantine_rules:
+        data, n_bad = quarantine_epoch(table, data, epoch_id, quarantine_rules)
+    if merge is not None:
+        m = merge(data)
+    elif wap_rules:
+        m = table.merge_epoch(data, epoch_id, stage=True)
+        if not m.get("skipped_duplicate_epoch"):
+            m = table.publish_staged(epoch_id, audit_rules=wap_rules)
+    else:
+        m = table.merge_epoch(data, epoch_id)
+    if quarantine_rules:
+        m["quarantined_rows"] = n_bad
+    return m
+
+
+def sync_followers(table, followers, epoch: int, m: dict) -> None:
+    """Bring every follower (an epoch-committed side output: the indexes
+    in operators/ built on incremental.py::EpochDeltas, or a
+    sinks/corpus.py::CorpusExport) to this committed epoch, given the
+    table's commit metrics ``m``: an empty batch commits the follower's
+    empty marker; a fresh commit hands over its ``delta_dir`` (O(Δ)
+    re-read, no extraction recompute); a table-side duplicate skip falls
+    through to the follower's snapshot recovery. Both sides' epoch
+    commits are idempotent, so a crash between the table commit and a
+    follower's self-heals on the next delivery."""
+    for f in followers:
+        if m.get("empty_batch"):
+            f.commit_empty_epoch(epoch)
+        else:
+            f.update_from_lake_epoch(table, epoch, delta_dir=m.get("delta_dir"))
+
+
 def apply_epoch(
     table: ParquetLakeTable,
     epoch_df: DataFrame,
@@ -224,27 +285,10 @@ def apply_epoch(
     if epoch_id in table.committed_epochs():
         return {"epoch_id": epoch_id, "skipped_duplicate_epoch": True,
                 "stages": ["RUN_BEGIN", "SKIPPED"]}
-    schema_events = (
-        epoch_df.filter(F.col("op") == "S")
-        .select("seq", "schema_change")
-        .collect()
+    return _commit_epoch(
+        table, _apply_ddl(table, epoch_df), epoch_id, quarantine_rules,
+        wap_rules,
     )
-    for row in sorted(schema_events, key=lambda r: r["seq"]):
-        if row["schema_change"]:
-            apply_schema_change(table, row["schema_change"])
-    data = epoch_df.filter(F.col("op") != "S")
-    n_bad = 0
-    if quarantine_rules:
-        data, n_bad = quarantine_epoch(table, data, epoch_id, quarantine_rules)
-    if wap_rules:
-        m = table.merge_epoch(data, epoch_id, stage=True)
-        if not m.get("skipped_duplicate_epoch"):
-            m = table.publish_staged(epoch_id, audit_rules=wap_rules)
-    else:
-        m = table.merge_epoch(data, epoch_id)
-    if quarantine_rules:
-        m["quarantined_rows"] = n_bad
-    return m
 
 
 def route_epoch(
@@ -347,98 +391,18 @@ def route_epoch_atomic(
             # the transaction's cached handle: one head read per table
             # per txn (merge_epoch below reuses it), not one per call
             tbl = txn._table(name)
-            # same per-slice preprocessing as apply_epoch: wire DDL
-            # first (driver-side, tiny), then dead-letter quarantine —
-            # quarantine rows land outside the transaction by design
-            # (the dead-letter table is operational telemetry, not part
-            # of the atomic cross-table view)
-            schema_events = (
-                slice_df.filter(F.col("op") == "S")
-                .select("seq", "schema_change")
-                .collect()
+            # same DDL + quarantine preamble as apply_epoch — quarantine
+            # rows land outside the transaction by design (the
+            # dead-letter table is operational telemetry, not part of
+            # the atomic cross-table view)
+            report["tables"][name] = _commit_epoch(
+                tbl, _apply_ddl(tbl, slice_df), epoch_id, quarantine_rules,
+                None, merge=lambda d: txn.merge_epoch(name, d, epoch_id),
             )
-            for row in sorted(schema_events, key=lambda r: r["seq"]):
-                if row["schema_change"]:
-                    apply_schema_change(tbl, row["schema_change"])
-            data = slice_df.filter(F.col("op") != "S")
-            n_bad = 0
-            if quarantine_rules:
-                data, n_bad = quarantine_epoch(
-                    tbl, data, epoch_id, quarantine_rules
-                )
-            m = txn.merge_epoch(name, data, epoch_id)
-            if quarantine_rules:
-                m["quarantined_rows"] = n_bad
-            report["tables"][name] = m
         report["commit"] = txn.commit(audit_rules=audit_rules)
         return report
     finally:
         epoch_df.unpersist()
-
-
-def _sync_signature_index(table, signature_index, epoch: int, m: dict) -> None:
-    """Bring an epoch-committed side index (SignatureIndex or BloomIndex —
-    both speak commit_empty_epoch / update_from_lake_epoch /
-    committed_epochs) to this committed epoch: O(Δ) re-read of
-    the epoch's delta files (no extraction recompute). Both sides' epoch
-    commits are idempotent, so a crash between the table commit and the
-    index commit self-heals — a table-side skip falls through to the
-    snapshot-recovery path in update_from_lake_epoch."""
-    if m.get("empty_batch"):
-        signature_index.commit_empty_epoch(epoch)
-    elif m.get("delta_dir"):
-        signature_index.update_from_lake_epoch(
-            table, epoch, delta_dir=m["delta_dir"]
-        )
-    elif epoch not in signature_index.committed_epochs():
-        signature_index.update_from_lake_epoch(table, epoch)
-
-
-def _sync_export(table, export_path: str, epoch: int, m: dict, lock) -> None:
-    """Bring a corpus export (sinks/corpus.py) to this committed epoch:
-    fold the epoch's change-set in (O(Δ + affected shards)). Idempotent
-    via the manifest's synced_epochs cursor, so a crash between the
-    table commit and the export sync self-heals on replay; the lock
-    serializes pipelined epochs onto the single-writer export (apply
-    order doesn't matter — resolution is a pure max over versions — but
-    concurrent manifest writes would).
-
-    Like _sync_signature_index, the fresh-commit path reads the epoch's
-    delta files from the commit metrics directly — in-loop compaction
-    can fold the epoch out of the snapshot before this sync runs, which
-    would invalidate a changes_between cursor. The fallback (export
-    lagging the table after a crash) still uses the feed, which also
-    normalizes renames; delta files carry write-time column names, so
-    sync exports promptly when using DDL."""
-    import os as _os
-
-    from ..sinks.corpus import refresh_from_changes
-
-    with lock:
-        if m.get("empty_batch"):
-            feed = table.spark.createDataFrame(
-                [], "url STRING, is_deleted BOOLEAN"
-            )
-        elif m.get("delta_dir"):
-            feed = table.spark.read.parquet(
-                _os.path.join(table.path, m["delta_dir"])
-            )
-        else:
-            feed = table.changes_between(epoch - 1, epoch)
-        refresh_from_changes(table.spark, export_path, feed, mark_epoch=epoch)
-
-
-def _export_synced_epochs(export_path: str) -> set:
-    import json as _json
-    import os as _os
-
-    from ..sinks.corpus import MANIFEST
-
-    mpath = _os.path.join(export_path, MANIFEST)
-    if not _os.path.exists(mpath):
-        return set()
-    with open(mpath) as f:
-        return {int(e) for e in _json.load(f).get("synced_epochs", [])}
 
 
 def list_epoch_partitions(path: str) -> list[int] | None:
@@ -495,12 +459,7 @@ def replay_batches(
     *,
     max_epochs: int | None = None,
     pipeline_depth: int | None = None,
-    signature_index=None,
-    bloom_index=None,
-    term_index=None,
-    agg_view=None,
-    chunk_store=None,
-    export_path: str | None = None,
+    followers=(),
     quarantine_rules: list[dict] | None = None,
     wap_rules: list[dict] | None = None,
 ) -> list[dict]:
@@ -526,37 +485,16 @@ def replay_batches(
     exactly ONE heavy Spark job (dedup+extract+write with piggybacked
     observe metrics).
 
-    ``signature_index`` (an operators.incremental.SignatureIndex with
-    ``id_col='url'``) is kept in lockstep with the table: after each
-    epoch commit the index ingests the epoch's delta files (O(Δ)), so
-    near-dups of every change-set are queryable per epoch.
-
-    ``bloom_index`` (an operators.bloom.BloomIndex) follows the same
-    lockstep contract: each committed epoch's live texts OR into the
-    membership fingerprint (O(Δ); bit_or idempotence makes replays and
-    duplicate deliveries exact no-ops).
-
-    ``term_index`` (an operators.termindex.TermIndex with
-    ``id_col='url'``) is the retrieval leg of the same contract: each
-    committed epoch's texts tokenize into the inverted term-stats index
-    (O(Δ) text bytes), so corpus df/BM25 statistics track the WAL.
-
-    ``agg_view`` (an operators.aggview.AggView) joins the contract as the
-    analytics leg: after each commit the view folds the epoch's signed
-    group deltas (pre/post winner rows of only the changed urls), keeping
-    a materialized grouped aggregate — retractions included — equal to
-    the batch aggregate of the published state at every epoch.
-
-    ``chunk_store`` (an operators.chunkstore.ChunkStore) is the
-    storage-dedup leg: each committed epoch's live texts chunk into the
-    content-addressed store (O(Δ) hashing + one anti-join against the
-    as-of store), so per-epoch transfer-savings metrics track the WAL.
-
-    ``export_path`` (a corpus export created by
-    ``sinks.corpus.export_from_lake``) is likewise kept in lockstep:
-    after each epoch commit the epoch's change feed folds into the
-    export (O(Δ + affected shards)) — a live training corpus synced to
-    the WAL.
+    ``followers`` are side outputs kept in epoch lockstep with the
+    table: the operators.incremental.SignatureIndex (near-dups),
+    operators.bloom.BloomIndex (membership), operators.termindex.TermIndex
+    (BM25 statistics), operators.aggview.AggView (grouped aggregates
+    with retractions), operators.chunkstore.ChunkStore (content-addressed
+    chunks) and sinks.corpus.CorpusExport (training-corpus shards). After
+    each epoch commit every follower folds the epoch's change-set at
+    O(Δ) (see :func:`sync_followers`). Resume visits every epoch some
+    follower lacks — a follower behind the table after a crash between
+    the two commits self-heals from the snapshot.
 
     ``pipeline_depth`` > 1 overlaps consecutive epochs' Spark jobs on
     driver threads (default: adaptive, see :func:`_auto_pipeline_depth`).
@@ -590,20 +528,10 @@ def replay_batches(
                 schema_by_epoch[int(row["epoch"])] = list(row["_sc"])
 
     done = table.committed_epochs()
-    if signature_index is not None:
-        # an epoch the table has but the index lacks (crash between the
-        # two commits) must still be visited so the index can self-heal
-        done = done & {int(e) for e in signature_index.committed_epochs()}
-    if bloom_index is not None:
-        done = done & {int(e) for e in bloom_index.committed_epochs()}
-    if term_index is not None:
-        done = done & {int(e) for e in term_index.committed_epochs()}
-    if agg_view is not None:
-        done = done & {int(e) for e in agg_view.committed_epochs()}
-    if chunk_store is not None:
-        done = done & {int(e) for e in chunk_store.committed_epochs()}
-    if export_path is not None:
-        done = done & _export_synced_epochs(export_path)
+    for f in followers:
+        # an epoch the table has but a follower lacks (crash between the
+        # two commits) must still be visited so the follower can self-heal
+        done = done & {int(e) for e in f.committed_epochs()}
     pending: list[int] = []
     n = 0
     for e in epochs:
@@ -614,41 +542,16 @@ def replay_batches(
         pending.append(int(e))
         n += 1
 
-    export_lock = threading.Lock()
-
     def run_epoch(e: int) -> dict:
         data = events.filter((F.col("epoch") == e) & (F.col("op") != "S"))
-        n_bad = 0
-        if quarantine_rules:
-            data, n_bad = quarantine_epoch(table, data, e, quarantine_rules)
-        if wap_rules:
-            m = table.merge_epoch(data, e, stage=True)
-            if not m.get("skipped_duplicate_epoch"):
-                m = table.publish_staged(e, audit_rules=wap_rules)
-        else:
-            m = table.merge_epoch(data, e)
-        if quarantine_rules:
-            m["quarantined_rows"] = n_bad
-        if signature_index is not None:
-            _sync_signature_index(table, signature_index, e, m)
-        if bloom_index is not None:
-            _sync_signature_index(table, bloom_index, e, m)
-        if term_index is not None:
-            _sync_signature_index(table, term_index, e, m)
-        if agg_view is not None:
-            _sync_signature_index(table, agg_view, e, m)
-        if chunk_store is not None:
-            _sync_signature_index(table, chunk_store, e, m)
-        if export_path is not None:
-            _sync_export(table, export_path, e, m, export_lock)
+        m = _commit_epoch(table, data, e, quarantine_rules, wap_rules)
+        sync_followers(table, followers, e, m)
         return m
 
     out: list[dict] = []
     if pipeline_depth <= 1:
         for e in pending:
-            for row in sorted(schema_by_epoch.get(e, []), key=lambda r: r["seq"]):
-                if row["schema_change"]:
-                    apply_schema_change(table, row["schema_change"])
+            _apply_schema_rows(table, schema_by_epoch.get(e, []))
             out.append(run_epoch(e))
         return out
 
@@ -663,12 +566,9 @@ def replay_batches(
             futures.clear()
 
         for e in pending:
-            changes = sorted(schema_by_epoch.get(e, []), key=lambda r: r["seq"])
-            if changes:
+            if schema_by_epoch.get(e):
                 drain()  # barrier: DDL applies to a quiesced table
-                for row in changes:
-                    if row["schema_change"]:
-                        apply_schema_change(table, row["schema_change"])
+                _apply_schema_rows(table, schema_by_epoch[e])
             futures.append(ex.submit(run_epoch, e))
             while len(futures) >= pipeline_depth:
                 out.append(futures.pop(0).result())
@@ -736,11 +636,7 @@ def stream_events(
     *,
     max_files_per_trigger: int = 1,
     schema_ddl: str | None = None,
-    signature_index=None,
-    bloom_index=None,
-    term_index=None,
-    agg_view=None,
-    chunk_store=None,
+    followers=(),
     quarantine_rules: list[dict] | None = None,
     wap_rules: list[dict] | None = None,
 ) -> None:
@@ -749,10 +645,9 @@ def stream_events(
 
     The sink key is Spark's ``batch_id`` (monotonic per checkpoint); on
     restart, a re-delivered batch hits the committed-epoch set and no-ops —
-    the foreachBatch exactly-once pattern. ``signature_index`` /
-    ``bloom_index`` / ``term_index`` are kept in lockstep exactly as in
-    :func:`replay_batches` (same idempotent epoch commits keyed by
-    batch_id, same crash-window self-heal)."""
+    the foreachBatch exactly-once pattern. ``followers`` are kept in
+    lockstep exactly as in :func:`replay_batches` (same idempotent epoch
+    commits keyed by batch_id, same crash-window self-heal)."""
     from ..sources.events import EVENT_SCHEMA
 
     reader = (
@@ -767,14 +662,7 @@ def stream_events(
             table, batch_df, e,
             quarantine_rules=quarantine_rules, wap_rules=wap_rules,
         )
-        if signature_index is not None:
-            _sync_signature_index(table, signature_index, e, m)
-        if bloom_index is not None:
-            _sync_signature_index(table, bloom_index, e, m)
-        if term_index is not None:
-            _sync_signature_index(table, term_index, e, m)
-        if agg_view is not None:
-            _sync_signature_index(table, agg_view, e, m)
+        sync_followers(table, followers, e, m)
 
     q = (
         reader.writeStream.foreachBatch(_apply)

@@ -40,7 +40,7 @@ def test_incremental_equals_batch_through_replay(spark, tmp_path):
     table = ParquetLakeTable(spark, str(tmp_path / "t"), n_buckets=4,
                              compact_min_deltas=10_000)
     view = AggView(spark, str(tmp_path / "v"), **SPEC)
-    replay_batches(table, events, pipeline_depth=1, agg_view=view)
+    replay_batches(table, events, pipeline_depth=1, followers=[view])
     assert view.committed_epochs() == {0, 1, 2, 3}
     assert _view_state(view) == _batch_agg(table)
 
@@ -90,12 +90,12 @@ def test_idempotence_crash_selfheal_and_compact(spark, tmp_path):
                              compact_min_deltas=10_000)
     view = AggView(spark, str(tmp_path / "v"), **SPEC)
     # crash window: table commits epochs 0-2, view only sees 0
-    replay_batches(table, events, max_epochs=1, agg_view=view)
+    replay_batches(table, events, max_epochs=1, followers=[view])
     replay_batches(table, events)  # table ahead, view behind
     assert view.committed_epochs() == {0}
     # resume with the view attached: self-heal re-syncs 1 and 2
     view2 = AggView(spark, str(tmp_path / "v"), **SPEC)
-    replay_batches(table, events, pipeline_depth=1, agg_view=view2)
+    replay_batches(table, events, pipeline_depth=1, followers=[view2])
     assert view2.committed_epochs() == {0, 1, 2}
     assert _view_state(view2) == _batch_agg(table)
     # duplicate delivery skips
@@ -120,7 +120,7 @@ def test_compact_crash_between_fold_and_gc(spark, tmp_path, monkeypatch):
     table = ParquetLakeTable(spark, str(tmp_path / "t"), n_buckets=4,
                              compact_min_deltas=10_000)
     view = AggView(spark, str(tmp_path / "v"), **SPEC)
-    replay_batches(table, events, pipeline_depth=1, agg_view=view)
+    replay_batches(table, events, pipeline_depth=1, followers=[view])
     want = _view_state(view)
 
     def boom(path):
@@ -158,7 +158,7 @@ def test_legacy_compact_layout_migrates(spark, tmp_path):
     table = ParquetLakeTable(spark, str(tmp_path / "t"), n_buckets=4,
                              compact_min_deltas=10_000)
     view = AggView(spark, str(tmp_path / "v"), **SPEC)
-    replay_batches(table, events, pipeline_depth=1, agg_view=view)
+    replay_batches(table, events, pipeline_depth=1, followers=[view])
     want = _view_state(view)
 
     # rebuild the LEGACY on-disk layout by hand: fold → base/state,
@@ -254,9 +254,9 @@ def test_streaming_lockstep(spark, tmp_path):
     events.filter("epoch = 0").coalesce(1).write.mode("append").parquet(src)
     table = ParquetLakeTable(spark, str(tmp_path / "t"), n_buckets=4)
     view = AggView(spark, str(tmp_path / "v"), **SPEC)
-    stream_events(spark, table, src, ckpt, agg_view=view)
+    stream_events(spark, table, src, ckpt, followers=[view])
     assert _view_state(view) == _batch_agg(table)
 
     events.filter("epoch = 1").coalesce(1).write.mode("append").parquet(src)
-    stream_events(spark, table, src, ckpt, agg_view=view)  # restart
+    stream_events(spark, table, src, ckpt, followers=[view])  # restart
     assert _view_state(view) == _batch_agg(table)

@@ -101,7 +101,7 @@ def test_geometry_mismatch_refused(spark, tmp_path):
 
 
 def test_lake_replay_keeps_bloom_in_lockstep(spark, tmp_path):
-    """replay_batches(bloom_index=...) leaves every published text
+    """replay_batches(followers=[bloom_index]) leaves every published text
     probing positive (no false negatives on live state), skips committed
     epochs on re-delivery, and self-heals a bloom that fell one epoch
     behind the table."""
@@ -112,14 +112,14 @@ def test_lake_replay_keeps_bloom_in_lockstep(spark, tmp_path):
     ev = change_stream(spark, 1500, 200, 3).cache()
     table = ParquetLakeTable(spark, str(tmp_path / "tbl"), n_buckets=4)
     idx = BloomIndex(spark, str(tmp_path / "bf"), m_bits=M, k=K)
-    replay_batches(table, ev, max_epochs=2, bloom_index=idx)
+    replay_batches(table, ev, max_epochs=2, followers=[idx])
     assert idx.committed_epochs() == {0, 1}
 
     # crash window: table commits epoch 2 WITHOUT the bloom...
     replay_batches(table, ev)
     assert idx.committed_epochs() == {0, 1}
     # ...resume attached: table skips, bloom self-heals from delta files
-    replay_batches(table, ev, bloom_index=idx)
+    replay_batches(table, ev, followers=[idx])
     assert idx.committed_epochs() == {0, 1, 2}
 
     pub = table.published().select(
@@ -142,7 +142,7 @@ def test_stream_events_keeps_bloom_in_lockstep(spark, tmp_path):
 
     table = ParquetLakeTable(spark, str(tmp_path / "tbl"), n_buckets=4)
     idx = BloomIndex(spark, str(tmp_path / "bf"), m_bits=M, k=K)
-    stream_events(spark, table, src, ckpt, bloom_index=idx)
+    stream_events(spark, table, src, ckpt, followers=[idx])
     assert len(idx.committed_epochs()) >= 1
 
     pub = table.published().select(F.col("url").alias("id"), "text")

@@ -93,6 +93,23 @@ def test_dedup_stats_keeper_rule(spark):
     assert stats[10].dup_chars == 0
 
 
+def test_dedup_stats_int_ids_past_32_bit_keys(spark):
+    # id·KEY_BASE passes 2^31 for int ids above ~21474: the keeper key
+    # must widen before the multiply, or 30000·KEY_BASE wraps negative
+    # and the higher id wrongly keeps the shared chunks
+    import random
+
+    rng = random.Random(4)
+    t = "".join(rng.choice("abcdefgh ") for _ in range(2000))
+    df = spark.createDataFrame(
+        [(21_000, t), (30_000, t)], "doc_id int, text string"
+    )
+    stats = {r.doc_id: r for r in chunk_dedup_stats(df).collect()}
+    assert stats[21_000].dup_chunks == 0
+    assert stats[30_000].dup_chunks == stats[30_000].n_chunks
+    assert stats[30_000].dup_chars == len(t)
+
+
 def test_repeated_content_within_one_doc(spark):
     # a doc that repeats the same long block: later occurrences of the
     # block's interior chunks are duplicates of the first

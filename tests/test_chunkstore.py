@@ -128,7 +128,7 @@ def test_ingest_from_lake_epochs(spark, tmp_path):
         [ev(1, "I", "u://a", blk + "one", 1),
          ev(2, "I", "u://b", blk + "two", 2)], ddl)
     m0 = apply_epoch(table, e0, 0)
-    r0 = store.ingest_from_lake_epoch(table, 0, delta_dir=m0["delta_dir"])
+    r0 = store.update_from_lake_epoch(table, 0, delta_dir=m0["delta_dir"])
     assert r0["new_chunks"] > 0 and r0["dup_chunks"] > 0  # shared blk dedups
 
     # epoch 1: update a (mostly same bytes) + delete b (ignored by store)
@@ -136,11 +136,11 @@ def test_ingest_from_lake_epochs(spark, tmp_path):
         [ev(3, "U", "u://a", blk + "one EDIT", 3),
          ev(4, "D", "u://b", None, 4)], ddl)
     m1 = apply_epoch(table, e1, 1)
-    r1 = store.ingest_from_lake_epoch(table, 1, delta_dir=m1["delta_dir"])
+    r1 = store.update_from_lake_epoch(table, 1, delta_dir=m1["delta_dir"])
     assert r1["dup_chunks"] > r1["new_chunks"]  # re-crawl mostly dedups
 
     # duplicate delivery of epoch 1 is a recorded no-op
-    r1b = store.ingest_from_lake_epoch(table, 1, delta_dir=m1["delta_dir"])
+    r1b = store.update_from_lake_epoch(table, 1, delta_dir=m1["delta_dir"])
     assert r1b["skipped_duplicate_epoch"]
     assert r1b["new_chunks"] == r1["new_chunks"]
 
@@ -175,7 +175,7 @@ def test_ingest_from_lake_snapshot_recovery(spark, tmp_path):
           "en", None)], ddl)
     apply_epoch(table, e0, 0)
     store = ChunkStore(spark, str(tmp_path / "cs"))
-    r = store.ingest_from_lake_epoch(table, 0)
+    r = store.update_from_lake_epoch(table, 0)
     assert r["new_chunks"] >= 1
     assert store.committed_epochs() == {0}
 
@@ -228,7 +228,7 @@ def test_crash_sweep_ingest_commits(spark, tmp_path):
 
 
 def test_replay_lockstep_and_self_heal(spark, tmp_path):
-    """replay_batches(chunk_store=...) keeps the store in epoch
+    """replay_batches(followers=[chunk_store]) keeps the store in epoch
     lockstep with the table, and a store that fell behind (crash
     between the two commits) self-heals on the next replay."""
     from embulk_spark.sources.events import change_stream
@@ -239,7 +239,7 @@ def test_replay_lockstep_and_self_heal(spark, tmp_path):
     table = ParquetLakeTable(spark, str(tmp_path / "t"), n_buckets=4,
                              compact_min_deltas=10_000)
     store = ChunkStore(spark, str(tmp_path / "cs"))
-    replay_batches(table, events, pipeline_depth=1, chunk_store=store)
+    replay_batches(table, events, pipeline_depth=1, followers=[store])
     assert store.committed_epochs() == {0, 1, 2}
     n_before = store.chunks().count()
     assert n_before > 0
@@ -249,10 +249,10 @@ def test_replay_lockstep_and_self_heal(spark, tmp_path):
     import shutil as sh
     sh.rmtree(str(tmp_path / "cs" / "deltas" / "epoch=2"))
     assert store.committed_epochs() == {0, 1}
-    replay_batches(table, events, pipeline_depth=1, chunk_store=store)
+    replay_batches(table, events, pipeline_depth=1, followers=[store])
     assert store.committed_epochs() == {0, 1, 2}
     assert store.chunks().count() == n_before
 
     # full redelivery is a no-op
-    replay_batches(table, events, pipeline_depth=1, chunk_store=store)
+    replay_batches(table, events, pipeline_depth=1, followers=[store])
     assert store.chunks().count() == n_before

@@ -256,6 +256,7 @@ def test_replay_keeps_export_in_lockstep(spark, tmp_path):
     (pipelined), final export == from-scratch export of the final table;
     resume after a lagging sync self-heals."""
     from embulk_spark.sinks.corpus import (
+        CorpusExport,
         export_from_lake,
         write_corpus_shards,
     )
@@ -269,13 +270,14 @@ def test_replay_keeps_export_in_lockstep(spark, tmp_path):
     table = ParquetLakeTable(spark, lake, n_buckets=4)
     export_from_lake(spark, table, export, n_shards=4)  # empty seed
 
-    replay_batches(table, events, export_path=export, max_epochs=2)
+    replay_batches(table, events, followers=[CorpusExport(export)],
+                   max_epochs=2)
     # crash-sim: table advances one epoch WITHOUT the export...
     replay_batches(ParquetLakeTable(spark, lake, n_buckets=4), events)
     # ...and a re-run with the export attached self-heals the lag
     replay_batches(
         ParquetLakeTable(spark, lake, n_buckets=4), events,
-        export_path=export,
+        followers=[CorpusExport(export)],
     )
     table = ParquetLakeTable(spark, lake, n_buckets=4)
     cols = ["url", "warc_ts", "seq", "text"]

@@ -111,7 +111,7 @@ def test_resume_from_disk(spark, docs, tmp_path):
 
 
 def test_lake_replay_keeps_index_in_lockstep(spark, tmp_path):
-    """replay_batches(signature_index=...) must leave the index equal to a
+    """replay_batches(followers=[signature_index]) must leave the index equal to a
     batch recompute over the table's published state, and heal an index
     that fell one epoch behind (crash between table and index commits)."""
     from embulk_spark.operators.dedup import minhash_df
@@ -125,7 +125,7 @@ def test_lake_replay_keeps_index_in_lockstep(spark, tmp_path):
         spark, str(tmp_path / "sigidx"), id_col="url", id_type="string", k=K, bands=BANDS,
         order_cols=["warc_ts", "seq"],
     )
-    replay_batches(table, ev, max_epochs=2, signature_index=idx)
+    replay_batches(table, ev, max_epochs=2, followers=[idx])
     assert idx.committed_epochs() == {0, 1}
 
     def batch_equiv():
@@ -144,7 +144,7 @@ def test_lake_replay_keeps_index_in_lockstep(spark, tmp_path):
     assert idx.committed_epochs() == {0, 1}
     # ...resume with the index attached: table skips, index self-heals
     # from the snapshot's delta files
-    replay_batches(table, ev, signature_index=idx)
+    replay_batches(table, ev, followers=[idx])
     assert idx.committed_epochs() == {0, 1, 2}
     batch_equiv()
 
@@ -167,11 +167,11 @@ def test_stream_events_keeps_index_in_lockstep(spark, tmp_path):
         spark, str(tmp_path / "sigidx"), id_col="url", id_type="string", k=K, bands=BANDS,
         order_cols=["warc_ts", "seq"],
     )
-    stream_events(spark, table, src, ckpt, signature_index=idx)
+    stream_events(spark, table, src, ckpt, followers=[idx])
     assert len(idx.committed_epochs()) >= 1
 
     events.filter("epoch > 0").coalesce(2).write.mode("append").parquet(src)
-    stream_events(spark, table, src, ckpt, signature_index=idx)
+    stream_events(spark, table, src, ckpt, followers=[idx])
 
     pub = table.published().select("url", "text")
     want = {

@@ -58,3 +58,18 @@ def test_disjoint_sets(spark):
     got = kmv_overlap(kmv_sketch(df, ["g"], "k", k=64), ["g"], k=64).collect()[0]
     assert got.shared <= 1  # hash coincidence at most
     assert got.jaccard_est < 0.05
+
+
+def test_overlap_pairs_lexicographic_over_group_columns(spark):
+    # two group columns: every unordered pair appears exactly once, also
+    # pairs whose first column ties ((x, 1) vs (x, 2)) or whose columns
+    # order disagree ((x, 2) vs (y, 1))
+    keys = [("x", 1), ("x", 2), ("y", 1)]
+    rows = [(g, h, i) for g, h in keys for i in range(10)]
+    df = spark.createDataFrame(rows, "g string, h int, k long")
+    got = kmv_overlap(kmv_sketch(df, ["g", "h"], "k", k=64), ["g", "h"], k=64)
+    pairs = {((r.g_1, r.h_1), (r.g_2, r.h_2)) for r in got.collect()}
+    assert pairs == {
+        (("x", 1), ("x", 2)), (("x", 1), ("y", 1)), (("x", 2), ("y", 1)),
+    }
+

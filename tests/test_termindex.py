@@ -63,7 +63,7 @@ def test_as_of_epoch_and_duplicate_delivery(spark, tmp_path):
     idx = TermIndex(spark, str(tmp_path / "ti"), id_col="doc_id",
                     id_type="bigint")
     e0 = _docs(spark, [(1, "alpha beta"), (2, "beta gamma")])
-    assert idx.update_epoch(e0, "text", 0)["committed"]
+    assert not idx.update_epoch(e0, "text", 0)["skipped_duplicate_epoch"]
     # duplicate delivery is a no-op
     assert idx.update_epoch(e0, "text", 0)["skipped_duplicate_epoch"]
     idx.update_epoch(_docs(spark, [(1, None)]), "text", 1)
@@ -91,7 +91,7 @@ def test_empty_index_answers_with_schema(spark, tmp_path):
 
 
 def test_replay_lockstep_with_lake(spark, tmp_path):
-    """replay_batches(term_index=...) keeps the retrieval index in epoch
+    """replay_batches(followers=[term_index]) keeps the retrieval index in epoch
     lockstep: after replay, df/BM25 from the index equal the batch
     computation over the lake's published state."""
     from embulk_spark.sources.events import change_stream
@@ -103,7 +103,7 @@ def test_replay_lockstep_with_lake(spark, tmp_path):
     idx = TermIndex(spark, str(tmp_path / "ti"), id_col="url",
                     order_cols=["warc_ts", "seq"],
                     order_types=["timestamp", "bigint"])
-    replay_batches(table, events, term_index=idx, pipeline_depth=1)
+    replay_batches(table, events, followers=[idx], pipeline_depth=1)
 
     assert idx.committed_epochs() == table.committed_epochs()
     pub = table.published().select("url", "text")
@@ -128,7 +128,7 @@ def test_replay_lockstep_with_lake(spark, tmp_path):
 
     _sh.rmtree(idx._epoch_dir(max(idx.committed_epochs())))
     assert idx.committed_epochs() != table.committed_epochs()
-    replay_batches(table, events, term_index=idx, pipeline_depth=1)
+    replay_batches(table, events, followers=[idx], pipeline_depth=1)
     assert idx.committed_epochs() == table.committed_epochs()
     assert {(r.term, r.df) for r in idx.term_df().collect()} == want_df
 
