@@ -62,6 +62,12 @@ class ChunkStore(EpochDeltas):
         super().__init__(path)
         self.spark = spark
         self.window, self.divisor, self.salt = window, divisor, salt
+        # the cut rule is part of the on-disk format: epochs chunked with
+        # different rules never share hashes, breaking incremental == batch
+        self._pin_meta(
+            {"window": window, "divisor": divisor, "salt": salt},
+            "chunk store",
+        )
 
     def _skipped(self, epoch: int) -> dict:
         mpath = os.path.join(self._epoch_dir(epoch), _METRICS)

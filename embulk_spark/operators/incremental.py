@@ -36,7 +36,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..streaming.lake_util import swap_leftover_base
+from ..streaming.lake_util import heal_swap_leftovers, is_swap_leftover
 from .dedup import banded_signatures, minhash_df
 
 _TOMBSTONE_SCHEMA = "array<bigint>"
@@ -69,6 +69,11 @@ class EpochDeltas:
         self.path = path
         self._deltas = os.path.join(path, "deltas")
         os.makedirs(self._deltas, exist_ok=True)
+        # a purge swap (purge_epoch_dirs) that crashed between its two
+        # renames leaves ``epoch=N`` missing and only its ``.old``/
+        # ``.purge`` sibling: put the epoch dir back before anything
+        # lists or reads the layout
+        heal_swap_leftovers(self._deltas)
 
     def _pin_meta(self, meta: dict, what: str) -> None:
         """Pin the follower's on-disk format in ``meta.json``: reopening
@@ -92,12 +97,13 @@ class EpochDeltas:
         return os.path.join(self._deltas, f"epoch={epoch}")
 
     def committed_epochs(self) -> set[int]:
-        # a crashed purge swap can leave only ``epoch=N.old<hex>`` behind
-        # (purge_epoch_dirs heals it): the epoch is still committed
+        # swap leftovers are not epochs: opening the handle healed any
+        # from an earlier crash, and one left since reads as uncommitted
+        # (the next delivery re-folds it from the lake, or raises)
         return {
-            int(swap_leftover_base(d).split("=", 1)[1])
+            int(d.split("=", 1)[1])
             for d in os.listdir(self._deltas)
-            if d.startswith("epoch=")
+            if d.startswith("epoch=") and not is_swap_leftover(d)
         }
 
     def _skipped(self, epoch: int) -> dict:

@@ -229,17 +229,13 @@ def _commit_epoch(
     epoch_id: int,
     quarantine_rules: list[dict] | None,
     wap_rules: list[dict] | None,
-    merge=None,
 ) -> dict:
-    """The per-epoch body after DDL, shared by every surface: quarantine
-    → WAP-or-merge. ``merge`` replaces the commit (catalog
-    transactions)."""
+    """The per-epoch body after DDL, shared by apply_epoch and
+    replay_batches: quarantine → WAP-or-merge."""
     n_bad = 0
     if quarantine_rules:
         data, n_bad = quarantine_epoch(table, data, epoch_id, quarantine_rules)
-    if merge is not None:
-        m = merge(data)
-    elif wap_rules:
+    if wap_rules:
         m = table.merge_epoch(data, epoch_id, stage=True)
         if not m.get("skipped_duplicate_epoch"):
             m = table.publish_staged(epoch_id, audit_rules=wap_rules)
@@ -395,10 +391,15 @@ def route_epoch_atomic(
             # rows land outside the transaction by design (the
             # dead-letter table is operational telemetry, not part of
             # the atomic cross-table view)
-            report["tables"][name] = _commit_epoch(
-                tbl, _apply_ddl(tbl, slice_df), epoch_id, quarantine_rules,
-                None, merge=lambda d: txn.merge_epoch(name, d, epoch_id),
-            )
+            data, n_bad = _apply_ddl(tbl, slice_df), 0
+            if quarantine_rules:
+                data, n_bad = quarantine_epoch(
+                    tbl, data, epoch_id, quarantine_rules
+                )
+            m = txn.merge_epoch(name, data, epoch_id)
+            if quarantine_rules:
+                m["quarantined_rows"] = n_bad
+            report["tables"][name] = m
         report["commit"] = txn.commit(audit_rules=audit_rules)
         return report
     finally:

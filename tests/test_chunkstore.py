@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from embulk_spark.operators.chunkstore import ChunkStore
@@ -87,6 +88,17 @@ def test_resume_from_fresh_handle(spark, tmp_path):
         for r in chunk_documents(_docs(spark, rows)).collect()
     }
     assert stored == batch
+
+
+def test_cut_rule_mismatch_refused(tmp_path):
+    """Reopening a store with another window/divisor/salt raises: later
+    epochs would cut with a different rule and never share hashes."""
+    p = str(tmp_path / "cs")
+    ChunkStore(None, p, window=16)
+    ChunkStore(None, p, window=16)  # same rule reopens
+    for kw in ({"window": 8}, {"divisor": 32}, {"salt": "x:"}):
+        with pytest.raises(ValueError, match="built with"):
+            ChunkStore(None, p, **kw)
 
 
 def test_as_of_epoch_read(spark, tmp_path):

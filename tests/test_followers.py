@@ -79,39 +79,62 @@ def _epoch(events, e):
     return events.filter(F.col("epoch") == e)
 
 
-@pytest.mark.parametrize("kind", sorted(FOLLOWERS))
-def test_follower_protocol(spark, tmp_path, events, kind):
-    table = ParquetLakeTable(spark, str(tmp_path / "t"), n_buckets=2,
+STEPS = ("syncs", "duplicate_skips", "empty_marker",
+         "resumes_from_snapshot", "compacted_epoch_raises")
+
+
+@pytest.fixture(scope="module")
+def protocol(spark, tmp_path_factory, events):
+    """Drive ONE table through the protocol's situations with all six
+    followers attached (the table-side Spark work runs once); record,
+    per follower and step, True if the step held, else what went wrong."""
+    root = tmp_path_factory.mktemp("followers")
+    table = ParquetLakeTable(spark, str(root / "t"), n_buckets=2,
                              compact_min_deltas=10_000)
-    f = FOLLOWERS[kind](spark, str(tmp_path / kind), table)
+    followers = {k: make(spark, str(root / k), table)
+                 for k, make in FOLLOWERS.items()}
+    seen = {k: {} for k in followers}
+
+    def each(step, check):
+        for kind, f in followers.items():
+            try:
+                seen[kind][step] = check(f)
+            except (Exception, pytest.fail.Exception) as exc:  # per follower
+                seen[kind][step] = repr(exc)
 
     m0 = apply_epoch(table, _epoch(events, 0), 0)
-    sync_followers(table, [f], 0, m0)
-    assert 0 in f.committed_epochs()
-    # duplicate delivery skips
-    again = f.update_from_lake_epoch(table, 0, delta_dir=m0["delta_dir"])
-    assert again["skipped_duplicate_epoch"]
-    rows_before = f._manifest()["total_rows"] if kind == "export" else None
+    sync_followers(table, list(followers.values()), 0, m0)
+    each("syncs", lambda f: f.committed_epochs() == {0})
+    each("duplicate_skips", lambda f: f.update_from_lake_epoch(
+        table, 0, delta_dir=m0["delta_dir"])["skipped_duplicate_epoch"])
+    rows_before = followers["export"]._manifest()["total_rows"]
 
     # an epoch the table committed empty: the follower's empty marker,
     # also when it is recovered from the snapshot (no delta_dir)
     assert apply_epoch(table, events.limit(0), 1).get("empty_batch")
-    r1 = f.update_from_lake_epoch(table, 1)
-    assert not r1["skipped_duplicate_epoch"]
-    assert 1 in f.committed_epochs()
-    if hasattr(f, "_epoch_dir"):  # the shared layout: a bare epoch dir
-        assert not any(n.endswith(".parquet")
-                       for n in os.listdir(f._epoch_dir(1)))
-    else:  # the export: the cursor advances, no shard is rewritten
-        assert f._manifest()["total_rows"] == rows_before
 
-    # crash window: the table commits, the follower does not — resume
+    def empty_marker(f):
+        r = f.update_from_lake_epoch(table, 1)
+        if hasattr(f, "_epoch_dir"):  # the shared layout: a bare epoch dir
+            bare = not any(n.endswith(".parquet")
+                           for n in os.listdir(f._epoch_dir(1)))
+        else:  # the export: the cursor advances, no shard is rewritten
+            bare = f._manifest()["total_rows"] == rows_before
+        return (not r["skipped_duplicate_epoch"] and bare
+                and f.committed_epochs() == {0, 1})
+
+    each("empty_marker", empty_marker)
+
+    # crash window: the table commits, the followers do not — resume
     # finds the epoch's files in the snapshot
     apply_epoch(table, _epoch(events, 1), 2)
-    assert 2 not in f.committed_epochs()
-    r2 = f.update_from_lake_epoch(table, 2)
-    assert not r2["skipped_duplicate_epoch"] and not r2.get("empty")
-    assert f.committed_epochs() >= {0, 1, 2}
+
+    def resumes(f):
+        r = f.update_from_lake_epoch(table, 2)
+        return (not r["skipped_duplicate_epoch"] and not r.get("empty")
+                and f.committed_epochs() == {0, 1, 2})
+
+    each("resumes_from_snapshot", resumes)
 
     # the same window, but compaction folded the epoch before the resume:
     # it cannot be recovered and must not commit as empty. (AggView reads
@@ -120,21 +143,64 @@ def test_follower_protocol(spark, tmp_path, events, kind):
     apply_epoch(table, _epoch(events, 2), 3)
     table.compact()
     table.expire_snapshots(keep_last=1)
-    with pytest.raises(ValueError, match="compacted|expired"):
-        f.update_from_lake_epoch(table, 3)
-    assert 3 not in f.committed_epochs()
+
+    def compacted_raises(f):
+        with pytest.raises(ValueError, match="compacted|expired"):
+            f.update_from_lake_epoch(table, 3)
+        return f.committed_epochs() == {0, 1, 2}
+
+    each("compacted_epoch_raises", compacted_raises)
+    return seen
 
 
-def test_committed_epochs_survive_a_crashed_purge_swap(tmp_path):
-    """A crash inside purge_epoch_dirs' dir swap can leave only the
-    ``epoch=N.old<hex>`` sibling; the epoch is still committed (the next
-    purge heals the name) and the listing must not choke on it."""
+@pytest.mark.parametrize("kind", sorted(FOLLOWERS))
+def test_follower_protocol(protocol, kind):
+    """Duplicate delivery skips; an epoch committed empty gets the empty
+    marker; a follower behind the table resumes through the snapshot;
+    an epoch compaction folded away raises instead of committing."""
+    assert protocol[kind] == dict.fromkeys(STEPS, True)
+
+
+def test_crashed_purge_swap_heals_on_open(spark, tmp_path):
+    """A crash between the two renames of purge_epoch_dirs' dir swap
+    leaves ``epoch=N`` missing, with only its ``.old<hex>`` sibling (plus
+    the filtered ``.purge<hex>`` copy once that was complete). Opening
+    the index puts the epoch back, rolled back to the old rows or forward
+    to the purged ones, so its rows stay readable; a handle opened before
+    the crash reads the epoch as uncommitted instead of choking."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from embulk_spark.operators.incremental import SignatureIndex
 
-    f = SignatureIndex(None, str(tmp_path / "si"))
-    os.makedirs(os.path.join(f._deltas, "epoch=3.old1234abcd"))
-    os.makedirs(f._epoch_dir(4))
+    def write_epoch(d, ids):  # a committed signature delta, written as-is
+        os.makedirs(d)
+        pq.write_table(pa.table({
+            "doc_id": pa.array(ids, pa.int64()),
+            "sig": pa.array([[i] * 4 for i in ids], pa.list_(pa.int64())),
+        }), os.path.join(d, "part-0.parquet"))
+
+    def ids(index):
+        return {r.doc_id for r in index.signatures().collect()}
+
+    path = str(tmp_path / "si")
+    f = SignatureIndex(spark, path)
+    write_epoch(f._epoch_dir(3), [1, 2])
+    write_epoch(f._epoch_dir(4), [3])
+
+    # crash before the filtered copy was complete: roll back
+    os.rename(f._epoch_dir(3), f._epoch_dir(3) + ".old0123abcd")
+    assert f.committed_epochs() == {4}
+    f = SignatureIndex(spark, path)
     assert f.committed_epochs() == {3, 4}
+    assert ids(f) == {1, 2, 3}
+
+    # crash after it: roll forward to the purged rows
+    os.rename(f._epoch_dir(3), f._epoch_dir(3) + ".old4567cdef")
+    write_epoch(f._epoch_dir(3) + ".purge89abcdef", [1])  # doc 2 purged
+    f = SignatureIndex(spark, path)
+    assert sorted(os.listdir(f._deltas)) == ["epoch=3", "epoch=4"]
+    assert ids(f) == {1, 3}
 
 
 @pytest.mark.parametrize("extra", [
