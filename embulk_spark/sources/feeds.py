@@ -13,12 +13,12 @@ Both dialects normalize to ONE record shape::
     (kind, guid, title, link, pub_ts)
 
 - RSS item:   <guid>, <title>, <link>text</link>, <pubDate> RFC-822
-- Atom entry: <id>,   <title>, <link href="…"/>,  <updated> ISO-8601
+- Atom entry: <id>,   <title>, <link href="…"/>,  <updated> RFC 3339
 
 Kind is sniffed per document (``<feed`` ⇒ atom, else rss). Timestamps
-parse in the session zone (the engine pins UTC, session.py:54); both
-formats carry second precision. Missing fields → null, entities
-unescape with the shared :func:`.xml.xml_unescape`.
+honour their zone offset and land as UTC instants; a zone-less stamp
+parses in the session zone (the engine pins UTC). Missing fields →
+null, entities unescape with the shared :func:`.xml.xml_unescape`.
 
 Scale shape: one ``regexp_extract_all`` + ``explode`` per document
 (1→k same-stage generator), then per-field ``regexp_extract`` — all
@@ -50,6 +50,37 @@ def _attr(row: Column, tag: str, attr: str) -> Column:
     return xml_unescape(F.try_element_at(hit, F.lit(1)))
 
 
+# RFC 822 §5.1 zone names → numeric offsets (the single-letter military
+# zones other than Z are left unparsed: feeds get their signs wrong)
+_RFC822_ZONES = {
+    "UT": "+0000", "GMT": "+0000", "Z": "+0000",
+    "EST": "-0500", "EDT": "-0400", "CST": "-0600", "CDT": "-0500",
+    "MST": "-0700", "MDT": "-0600", "PST": "-0800", "PDT": "-0700",
+}
+
+
+def _rfc822_ts(raw: Column) -> Column:
+    """RSS ``pubDate`` → UTC instant: numeric offsets (``+0530``) and the
+    RFC 822 zone names; a stamp with no zone reads as UTC (the engine
+    session zone). Unparseable → null. The day-of-week prefix is
+    stripped first: Spark's parser refuses E-patterns on parse."""
+    stamp = F.regexp_replace(raw, F.lit(r"^[A-Za-z]{3},\s*"), F.lit(""))
+    offset = F.try_element_at(
+        F.create_map(*[F.lit(x) for kv in _RFC822_ZONES.items() for x in kv]),
+        F.upper(F.regexp_extract(stamp, r"\s([A-Za-z]+)$", 1)),
+    )
+    numeric = F.coalesce(
+        F.concat(
+            F.regexp_replace(stamp, F.lit(r"[A-Za-z]+$"), F.lit("")), offset
+        ),
+        stamp,
+    )
+    return F.coalesce(
+        F.try_to_timestamp(numeric, F.lit("d MMM yyyy HH:mm:ss Z")),
+        F.try_to_timestamp(stamp, F.lit("d MMM yyyy HH:mm:ss")),
+    )
+
+
 def parse_feed_column(df: DataFrame, col: Column) -> DataFrame:
     """Explode every feed document in string Column ``col`` into
     normalized entry records (kind, guid, title, link, pub_ts)."""
@@ -75,19 +106,7 @@ def parse_feed_column(df: DataFrame, col: Column) -> DataFrame:
         _child(r, "guid").alias("guid"),
         _child(r, "title").alias("title"),
         _child(r, "link").alias("link"),
-        F.to_timestamp(
-            # strip the day-of-week prefix (Spark's post-3.0 parser
-            # refuses E-patterns on parse) and the trailing zone word;
-            # the engine session is UTC
-            F.regexp_replace(
-                F.regexp_replace(
-                    _child(r, "pubDate"), F.lit(r"^[A-Za-z]{3},\s*"), F.lit("")
-                ),
-                F.lit(r"\s+(GMT|UT|Z|\+0000)$"),
-                F.lit(""),
-            ),
-            "dd MMM yyyy HH:mm:ss",
-        ).alias("pub_ts"),
+        _rfc822_ts(_child(r, "pubDate")).alias("pub_ts"),
     )
 
     atom_rows = (
@@ -108,8 +127,9 @@ def parse_feed_column(df: DataFrame, col: Column) -> DataFrame:
         F.coalesce(_attr(r, "link", "href"), _child(r, "link")).alias(
             "link"
         ),
-        F.to_timestamp(
-            _child(r, "updated"), "yyyy-MM-dd'T'HH:mm:ss'Z'"
+        # XXX takes "Z" and "+02:00" alike; fractional seconds optional
+        F.try_to_timestamp(
+            _child(r, "updated"), F.lit("yyyy-MM-dd'T'HH:mm:ss[.SSS]XXX")
         ).alias("pub_ts"),
     )
     return rss.unionByName(atom)

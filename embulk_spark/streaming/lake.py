@@ -206,6 +206,7 @@ class ParquetLakeTable(ScanPlanMixin, CompactionMixin, MaintenanceMixin):
                 "version": 0,
                 "epoch_id": None,
                 "committed_epochs": [],
+                "empty_epochs": [],
                 "schema_v": 0,
                 "schemas": {"0": schema_ddl},
                 "renames": [],
@@ -411,7 +412,7 @@ class ParquetLakeTable(ScanPlanMixin, CompactionMixin, MaintenanceMixin):
         ]
         if files:
             return [os.path.join(self.path, f) for f in files]
-        if epoch in self._empty_epochs():
+        if epoch in self._empty_epochs(snap):
             return []
         raise ValueError(
             f"epoch {epoch} has no delta files in the snapshot (already "
@@ -1219,9 +1220,9 @@ class ParquetLakeTable(ScanPlanMixin, CompactionMixin, MaintenanceMixin):
                 "purged keys)"
             )
         # victim buckets derive INSIDE the compaction from its own
-        # captured snapshot (compact → _compact_once with buckets=None +
-        # drop_keys), so a concurrent rebucket retries with the fresh
-        # layout instead of leaving un-rewritten buckets
+        # captured snapshot (compact with buckets=None + drop_keys), so a
+        # concurrent rebucket retries with the fresh layout instead of
+        # leaving un-rewritten buckets
         rep = self.compact(drop_keys=keys)
         # tags drop only after the rewrite succeeded: a failed purge must
         # not destroy retention leases as a side effect
@@ -1625,8 +1626,11 @@ class ParquetLakeTable(ScanPlanMixin, CompactionMixin, MaintenanceMixin):
                 committed_at = time.time()
                 out_metrics = dict(metrics, committed_at=committed_at)
                 epochs = set(cur["committed_epochs"])
+                empty = set(cur.get("empty_epochs", ()))
                 if epoch_id is not None:
                     epochs.add(epoch_id)
+                    if metrics.get("empty_batch"):
+                        empty.add(epoch_id)
                 deltas = cur["deltas"]
                 if folded_deltas is not None:
                     folded_keys = {d["files"][0] for d in folded_deltas if d["files"]}
@@ -1653,6 +1657,7 @@ class ParquetLakeTable(ScanPlanMixin, CompactionMixin, MaintenanceMixin):
                     "version": new_version,
                     "epoch_id": epoch_id,
                     "committed_epochs": sorted(epochs),
+                    "empty_epochs": sorted(empty),
                     "schema_v": schema_v if schema_v is not None else cur["schema_v"],
                     "schemas": schemas or cur["schemas"],
                     "renames": renames if renames is not None else cur["renames"],

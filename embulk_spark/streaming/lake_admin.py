@@ -163,6 +163,7 @@ class MaintenanceMixin:
                     "version": cur["version"] + 1,
                     "epoch_id": None,
                     "committed_epochs": target["committed_epochs"],
+                    "empty_epochs": target.get("empty_epochs", []),
                     "schema_v": target["schema_v"],
                     "schemas": target["schemas"],
                     "renames": target["renames"],
@@ -375,6 +376,7 @@ class MaintenanceMixin:
             "version": 0,
             "epoch_id": None,
             "committed_epochs": snap["committed_epochs"],
+            "empty_epochs": snap.get("empty_epochs", []),
             "schema_v": snap["schema_v"],
             "schemas": snap["schemas"],
             "renames": snap["renames"],
@@ -702,21 +704,6 @@ class MaintenanceMixin:
             head = json.load(f)
         if head["version"] == meta["fork_version"]:
             return {"fast_forward": name, "noop": True}
-        # empty-batch markers live in snapshot metrics, and _empty_epochs
-        # scans only THIS ref's snapshot files — carry the branch's
-        # markers for the adopted epochs into the publish snapshot, or a
-        # later changes_between on main would count an adopted empty
-        # epoch as "compacted into the base" and raise
-        branch_empty: set[int] = set()
-        for fn in heads:
-            try:
-                with open(os.path.join(sdir, fn)) as f:
-                    m = json.load(f).get("metrics") or {}
-            except (OSError, ValueError):
-                continue
-            if m.get("empty_batch") and m.get("epoch_id") is not None:
-                branch_empty.add(int(m["epoch_id"]))
-            branch_empty |= {int(e) for e in m.get("empty_epochs", ())}
         with self._commit_lock:
             while True:
                 cur = self.current_snapshot()
@@ -759,7 +746,6 @@ class MaintenanceMixin:
                 new["metrics"] = {
                     "fast_forward": name,
                     "from_branch_version": head["version"],
-                    "empty_epochs": sorted(branch_empty & set(adopted)),
                     "committed_at": time.time(),
                 }
                 new["committed_at"] = time.time()

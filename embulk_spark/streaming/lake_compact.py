@@ -1,6 +1,7 @@
 """Compaction for :class:`~embulk_spark.streaming.lake.ParquetLakeTable`:
-fold deltas into the hash-bucketed base (full / hot-bucket / partial
-row-group-disjoint modes) and partition evolution (rebucket).
+fold deltas into the hash-bucketed base and partition evolution
+(rebucket). Every fold — full (all buckets), hot-bucket, explicit bucket
+set, delta binpack, purge — runs the one bucket-set fold ``_fold``.
 Mechanically split out of lake.py (round 4, no behavior change): the
 methods run as part of ParquetLakeTable via mixin inheritance and are
 documented there."""
@@ -8,13 +9,12 @@ documented there."""
 from __future__ import annotations
 
 import os
-import re
 import time
 import uuid
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..operators.merge import bucket_of, dedup_latest
 from .lake_util import CommitConflict
@@ -30,47 +30,31 @@ class CompactionMixin:
         delta_rows = sum(d["rows"] for d in snap["deltas"])
         if len(snap["deltas"]) < self.compact_min_deltas:
             return None
-        if self.compact_mode == "hot":
-            # per-bucket trigger lives inside compact_hot; the min_deltas
-            # gate above bounds how often the O(Δ) selection scan runs.
-            # The newest feed_retain_epochs epochs are exempt from any
-            # fold so the incremental feed keeps serving them per-epoch.
-            if not self._compact_lock.acquire(blocking=False):
-                return None
-            try:
-                retain = self._feed_retain_set(snap)
-                out = self.compact_hot(retain_epochs=retain)
-                if out is None:
-                    foldable_rows = sum(
-                        d["rows"] for d in snap["deltas"]
-                        if d.get("epoch_id") is None
-                        or int(d["epoch_id"]) not in retain
-                    )
-                    if foldable_rows > 0:
-                        # no bucket justifies a base fold — binpack the
-                        # aged-out delta groups into one deduped residual
-                        # so the manifest and small-file count stay
-                        # bounded (base untouched)
-                        out = self.compact(buckets=[], retain_epochs=retain)
-                return out
-            finally:
-                self._compact_lock.release()
-        if delta_rows < self.compact_ratio * max(1, snap["base_rows"]):
+        hot_mode = self.compact_mode == "hot"
+        # hot mode's per-bucket trigger lives inside compact_hot; the
+        # min_deltas gate above bounds how often its O(Δ) selection scan
+        # runs
+        if not hot_mode and (
+            delta_rows < self.compact_ratio * max(1, snap["base_rows"])
+        ):
+            return None
+        # the newest feed_retain_epochs epochs are exempt from any fold so
+        # the incremental feed keeps serving them per-epoch; with nothing
+        # else pending a fold would only rewrite base files
+        retain = self._feed_retain_set(snap)
+        if not self._fold_groups(snap, retain):
             return None
         if not self._compact_lock.acquire(blocking=False):
             return None  # a pipelined sibling is already compacting
         try:
-            retain = self._feed_retain_set(snap)
-            if retain:
-                # full-mode auto fold = an all-bucket partial fold that
-                # carries the newest epochs' groups untouched, so the
-                # incremental feed keeps serving them per-epoch (same
-                # base-rewrite cost; only aged-out groups fold)
-                return self.compact(
-                    buckets=list(range(self._nb(snap))),
-                    retain_epochs=retain,
-                )
-            return self.compact()
+            if not hot_mode:
+                return self.compact(retain_epochs=retain)
+            # no bucket justifying a base fold → binpack the aged-out
+            # groups into one deduped residual (base untouched) so the
+            # manifest and small-file count stay bounded
+            return self.compact_hot(retain_epochs=retain) or self.compact(
+                buckets=[], retain_epochs=retain
+            )
         finally:
             self._compact_lock.release()
 
@@ -93,6 +77,24 @@ class CompactionMixin:
         eps = sorted(int(e) for e in snap["committed_epochs"])
         return set(eps[-self.feed_retain_epochs:])
 
+    def _fold_groups(
+        self, snap: dict, retain_epochs: set[int] | None
+    ) -> list[dict]:
+        """The delta groups a fold of ``snap`` absorbs. Groups of the
+        retained epochs ride through untouched — neither folded into the
+        base nor binpacked into the residual. A non-empty
+        ``retain_epochs`` is re-anchored to THIS capture: an epoch a
+        pipelined sibling committed since the caller chose the set is
+        inside the current newest-N feed window and must not be folded
+        out of the feed. An empty set folds every group."""
+        retain = set(retain_epochs or ())
+        if retain:
+            retain |= self._feed_retain_set(snap)
+        return [
+            d for d in snap["deltas"]
+            if d.get("epoch_id") is None or int(d["epoch_id"]) not in retain
+        ]
+
     def compact(
         self,
         tombstone_retention_ts: str | None = None,
@@ -101,32 +103,51 @@ class CompactionMixin:
         retain_epochs: set[int] | None = None,
         drop_keys: list[str] | None = None,
     ) -> dict:
-        """Merge base∪deltas into a fresh bucketed base (one row per url).
-        ``tombstone_retention_ts``: drop tombstones older than this
-        watermark — safe once events that late can no longer arrive.
-        Retries from a fresh snapshot if a concurrent compaction (another
-        process) replaced the base while this one ran.
+        """Fold pending deltas into the bucketed base (one row per url
+        per folded bucket). ``tombstone_retention_ts``: drop tombstones
+        older than this watermark — safe once events that late can no
+        longer arrive. Retries from a fresh snapshot if a concurrent
+        compaction (another process) replaced the base while this one
+        ran.
 
-        ``buckets``: PARTIAL compaction — fold the deltas into only these
-        buckets' base slices (Iceberg's `rewrite_data_files ... WHERE` /
-        binpack-with-filter). Delta rows outside the set are rewritten as
-        one per-url-deduped *residual* delta group instead of touching
-        their base buckets, so the rewrite costs O(selected base slice +
-        all deltas) — never O(table). At 100 TB with a hot-domain change
-        stream this is the only affordable shape: the cold 99% of the base
-        is carried forward by reference (same files, byte-identical).
+        ``buckets``: the base buckets to fold into (Iceberg's
+        `rewrite_data_files ... WHERE` / binpack-with-filter); None means
+        every bucket, or with ``drop_keys`` the buckets those keys hash
+        to under the captured snapshot. Delta rows outside the set are
+        rewritten as one per-url-deduped *residual* delta group instead
+        of touching their base buckets, so the rewrite costs O(selected
+        base slice + all deltas) — never O(table). At 100 TB with a
+        hot-domain change stream this is the only affordable shape: the
+        cold 99% of the base is carried forward by reference (same
+        files, byte-identical). ``buckets=[]`` is a pure delta binpack.
         Residual groups carry ``epoch_id: None`` plus the folded epoch
         set; changes_between serves a range from the residual when the
         range fully covers that set, and raises "cursor too old"
-        otherwise. ``retain_epochs``: delta groups of these epochs are
-        carried forward untouched (never folded) — auto maintenance
-        passes the newest ``feed_retain_epochs`` epochs here so pollers
-        keep exact per-epoch feed service."""
+        otherwise. With no foldable delta the selected base buckets are
+        still rewritten (re-layout after ``set_properties``, purge).
+        ``retain_epochs``: delta groups of these epochs are carried
+        forward untouched (never folded) — auto maintenance passes the
+        newest ``feed_retain_epochs`` epochs here so pollers keep exact
+        per-epoch feed service. ``drop_keys``: every stored version of
+        these urls is left out of the rewrite (purge_keys)."""
         while True:
+            snap = self.current_snapshot()
+            sel = buckets
+            if sel is None:
+                nb = self._nb(snap)
+                # purge: the victim buckets MUST derive from the snapshot
+                # this fold captures — a stale set under a concurrent
+                # rebucket would leave un-rewritten buckets (and an
+                # unfiltered residual) holding the keys
+                sel = (
+                    self._buckets_of_keys(list(drop_keys), nb) if drop_keys
+                    else range(nb)
+                )
             try:
-                return self._compact_once(
-                    tombstone_retention_ts, buckets,
-                    retain_epochs=retain_epochs, drop_keys=drop_keys,
+                return self._fold(
+                    snap, sel, retain_epochs=retain_epochs,
+                    drop_keys=drop_keys,
+                    tombstone_retention_ts=tombstone_retention_ts,
                 )
             except CommitConflict:
                 continue
@@ -153,29 +174,16 @@ class CompactionMixin:
         buckets fold every few epochs while the cold tail's base files are
         never rewritten."""
         r = self.compact_ratio if ratio is None else ratio
-        base_retain = set(retain_epochs or ())
         while True:
             snap = self.current_snapshot()
-            # re-anchor retention to THIS capture: an epoch committed by a
-            # pipelined sibling between the caller's snapshot and this
-            # retry is inside the current newest-N window and must not be
-            # folded out of the feed (only when retention was asked for —
-            # an empty set means an explicit fold-everything call)
-            retain = base_retain | (
-                self._feed_retain_set(snap) if base_retain else set()
-            )
-            fold_groups = [
-                d for d in snap["deltas"]
-                if d.get("epoch_id") is None
-                or int(d["epoch_id"]) not in retain
-            ]
-            if not fold_groups:
-                return None
             # selection counts only what a fold could actually absorb —
             # retained (feed-servable) epochs' rows don't make a bucket hot
             delta = self._read_file_groups(
                 snap,
-                [(int(d["schema_v"]), d["files"]) for d in fold_groups],
+                [
+                    (int(d["schema_v"]), d["files"])
+                    for d in self._fold_groups(snap, retain_epochs)
+                ],
             )
             if delta is None:
                 return None
@@ -199,9 +207,9 @@ class CompactionMixin:
             if max_buckets is not None:
                 hot = hot[:max_buckets]
             try:
-                return self._compact_once(
-                    tombstone_retention_ts, sorted(hot), from_snap=snap,
-                    retain_epochs=retain,
+                return self._fold(
+                    snap, hot, retain_epochs=retain_epochs,
+                    tombstone_retention_ts=tombstone_retention_ts,
                 )
             except CommitConflict:
                 continue  # concurrent base change: re-select and retry
@@ -337,83 +345,27 @@ class CompactionMixin:
                     total += os.path.getsize(fp)
         return total
 
-    def _compact_once(
-        self,
-        tombstone_retention_ts: str | None = None,
-        buckets: list[int] | None = None,
-        *,
-        from_snap: dict | None = None,
-        retain_epochs: set[int] | None = None,
-        drop_keys: list[str] | None = None,
-    ) -> dict:
-        snap = from_snap or self.current_snapshot()
-        if drop_keys and buckets is None:
-            # purge path: the victim buckets MUST derive from the same
-            # snapshot this fold captures — a stale caller-computed set
-            # under a concurrent rebucket would leave un-rewritten
-            # buckets (and an unfiltered residual) holding the keys
-            buckets = sorted(
-                self._buckets_of_keys(list(drop_keys), self._nb(snap))
-            )
-        if buckets is None and retain_epochs:
-            # a retained "full" fold = all-bucket partial fold (the full
-            # path by definition folds every group; silently ignoring the
-            # retain set would drop the retained epochs from the feed)
-            buckets = list(range(self._nb(snap)))
-        if buckets is not None:
-            return self._compact_partial(
-                snap, tombstone_retention_ts, buckets,
-                retain_epochs=retain_epochs, drop_keys=drop_keys,
-            )
-        t0 = time.perf_counter()
-        # read exactly the captured version: a delta committed between the
-        # two reads must NOT be folded (it stays in the delta list)
-        merged = self.read(version=snap["version"])
-        if drop_keys:
-            # physical purge path (purge_keys): the fold writes a base
-            # with every version of these keys gone
-            merged = merged.filter(~F.col("url").isin(list(drop_keys)))
-        if tombstone_retention_ts:
-            merged = merged.filter(
-                (~F.col("is_deleted"))
-                | (F.col("warc_ts") >= F.lit(tombstone_retention_ts))
-            )
-        new_base, total_rows = self._write_bucketed_base(
-            merged, snap, self._nb(snap), "compact",
-            approx_bytes=self._approx_input_bytes(snap),
-        )
-        metrics = {
-            "compaction": True,
-            "base_rows": total_rows,
-            "deltas_folded": len(snap["deltas"]),
-            "bytes_rewritten": self._entry_bytes(new_base.values()),
-            "seconds": round(time.perf_counter() - t0, 3),
-        }
-        return self._commit(
-            snap, None, metrics=metrics, lineage=[],
-            new_base=new_base, new_base_rows=total_rows,
-            folded_deltas=snap["deltas"],
-            expect_base_of=snap,
-        )
-
-    def _compact_partial(
+    def _fold(
         self,
         snap: dict,
-        tombstone_retention_ts: str | None,
-        buckets: list[int],
+        buckets: Iterable[int],
         *,
         retain_epochs: set[int] | None = None,
         drop_keys: list[str] | None = None,
+        tombstone_retention_ts: str | None = None,
     ) -> dict:
-        """Fold the captured deltas into ``buckets``' base slices only.
+        """The one fold body behind compact / compact_hot / maybe_compact
+        / purge_keys: merge the captured foldable deltas into
+        ``buckets``' base slices only.
 
-        One pass over the deltas (persisted, split hot/cold), the base
-        read limited to the selected buckets. Cold delta rows are deduped
-        per url (the winner survives — same (warc_ts, seq) resolution as
-        every read, so collapsing losers is semantics-preserving) and
-        written back as one residual group; cold BASE buckets are carried
-        forward by reference. Iceberg analogue: rewrite_data_files with a
-        partition filter."""
+        The base read is limited to the selected buckets. Cold delta rows
+        (outside the selection) are deduped per url (the winner survives
+        — same (warc_ts, seq) resolution as every read, so collapsing
+        losers is semantics-preserving) and written back as one residual
+        group; cold BASE buckets are carried forward by reference. When
+        every bucket is selected no delta row is cold, so there is no
+        residual job and the delta is read once. Iceberg analogue:
+        rewrite_data_files with a partition filter."""
         t0 = time.perf_counter()
         hot = sorted({int(b) for b in buckets})
         hot_set = set(hot)
@@ -421,116 +373,81 @@ class CompactionMixin:
         bad = [b for b in hot if b < 0 or b >= nb]
         if bad:
             raise ValueError(f"buckets {bad} outside [0, {nb})")
-        retention = (
-            (~F.col("is_deleted"))
-            | (F.col("warc_ts") >= F.lit(tombstone_retention_ts))
-            if tombstone_retention_ts else None
-        )
-        retain = set(retain_epochs or ())
-        if retain and drop_keys:
+        if retain_epochs and drop_keys:
             raise ValueError(
                 "drop_keys cannot combine with retain_epochs: a retained "
                 "delta group may hold a purged key's rows — purge folds "
                 "every group"
             )
-        if retain:
-            # same re-anchoring as compact_hot: this snap may be a
-            # CommitConflict-retry re-capture newer than the caller's
-            retain |= self._feed_retain_set(snap)
-        if retain and tombstone_retention_ts:
+        if retain_epochs and tombstone_retention_ts:
             raise ValueError(
                 "tombstone_retention_ts cannot combine with retain_epochs: "
                 "a retained group may hold an older (late-data) live row "
                 "for a url whose tombstone would be retired before the "
                 "fold ever sees that row — fold fully, then expire"
             )
-        # retained (feed-servable) epochs' groups ride through untouched —
-        # neither folded into the base nor binpacked into the residual
-        fold_groups = [
-            d for d in snap["deltas"]
-            if d.get("epoch_id") is None or int(d["epoch_id"]) not in retain
-        ]
+        fold_groups = self._fold_groups(snap, retain_epochs)
         delta = self._read_file_groups(
             snap, [(int(d["schema_v"]), d["files"]) for d in fold_groups]
         )
-        if delta is None:
-            if not drop_keys:
-                # nothing foldable: partial compaction is a no-op
-                return {"compaction": True, "partial": True, "noop": True}
-            # purge with zero pending deltas: the victim base buckets
-            # still rewrite (the purge is ABOUT the base bytes)
-            base_hot = self._base_df(snap, hot)
-            if base_hot is None:
-                return {"compaction": True, "partial": True, "noop": True}
-            merged_hot = base_hot.filter(
-                ~F.col("url").isin(list(drop_keys))
-            )
-            hot_base, hot_rows = self._write_bucketed_base(
-                merged_hot, snap, nb, "compact",
-                approx_bytes=self._approx_input_bytes(snap, hot),
-            )
-            new_base = {
-                b: e for b, e in snap["base"].items() if int(b) not in hot_set
-            }
-            new_base.update(hot_base)
-            total_rows = sum(
-                int(e.get("rows") or 0) for e in new_base.values()
-            )
-            metrics = {
-                "compaction": True,
-                "partial": True,
-                "buckets_folded": hot,
-                "base_rows": total_rows,
-                "deltas_folded": 0,
-                "deltas_retained": len(snap["deltas"]),
-                "residual_rows": 0,
-                "bytes_rewritten": self._entry_bytes(hot_base.values()),
-                "seconds": round(time.perf_counter() - t0, 3),
-            }
-            return self._commit(
-                snap, None, metrics=metrics, lineage=[],
-                new_base=new_base, new_base_rows=total_rows,
-                folded_deltas=[],
-                expect_base_of=snap,
-            )
-        delta = delta.persist()
+        base_hot = self._base_df(snap, hot)
+        if delta is None and base_hot is None:
+            # nothing selected holds rows and nothing is foldable
+            return {"compaction": True, "partial": True, "noop": True}
+        cold = delta is not None and len(hot) < nb
+        read_twice = cold and bool(hot)  # hot merge + residual
+        if read_twice:
+            delta = delta.persist()
+        hot_base: dict[str, dict] = {}
+        res_files, res_rows, res_bytes, res_stats = [], 0, 0, None
         try:
-            hot_col = F.col("bkt").isin(hot)
-            base_hot = self._base_df(snap, hot)
-            merged_hot = dedup_latest(
-                delta.filter(hot_col) if base_hot is None
-                else base_hot.unionByName(delta.filter(hot_col))
-            )
-            if drop_keys:
-                # purge_keys guarantees the key set hashes inside the
-                # hot buckets, so filtering the hot merge removes every
-                # stored version; the cold residual cannot contain them
-                merged_hot = merged_hot.filter(
-                    ~F.col("url").isin(list(drop_keys))
+            if hot:
+                hot_delta = (
+                    delta.filter(F.col("bkt").isin(hot)) if cold else delta
                 )
-            residual = dedup_latest(delta.filter(~hot_col))
-            if retention is not None:
-                # retention applies ONLY where base and deltas merged: a
-                # residual tombstone may be guarding a live row in a cold
-                # (carried-forward) base bucket — dropping it would
-                # resurrect that row. Cold tombstones retire when their
-                # bucket eventually folds.
-                merged_hot = merged_hot.filter(retention)
-            hot_base, hot_rows = self._write_bucketed_base(
-                merged_hot, snap, nb, "compact",
-                approx_bytes=self._approx_input_bytes(snap, hot),
-            )
-            # residual write: no shuffle (the dedup agg already placed
-            # rows); bkt+url sort within tasks so the bkt IN filter on
-            # future reads prunes at row-group granularity
-            rel_dir = f"data/resid_{uuid.uuid4().hex[:8]}"
-            residual.sortWithinPartitions("bkt", "url").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(self.path, rel_dir))
-            res_files, res_rows, _ = self._list_files(rel_dir)
-            res_stats = self._maybe_stats(res_files)
+                if hot_delta is None:
+                    merged_hot = base_hot  # already one row per url
+                else:
+                    merged_hot = dedup_latest(
+                        hot_delta if base_hot is None
+                        else base_hot.unionByName(hot_delta)
+                    )
+                if drop_keys:
+                    # purge: the selection covers every bucket the keys
+                    # hash to, so filtering the hot merge removes every
+                    # stored version; the cold residual cannot hold them
+                    merged_hot = merged_hot.filter(
+                        ~F.col("url").isin(list(drop_keys))
+                    )
+                if tombstone_retention_ts:
+                    # retention applies ONLY where base and deltas
+                    # merged: a residual tombstone may be guarding a live
+                    # row in a cold (carried-forward) base bucket —
+                    # dropping it would resurrect that row. Cold
+                    # tombstones retire when their bucket eventually folds.
+                    merged_hot = merged_hot.filter(
+                        (~F.col("is_deleted"))
+                        | (F.col("warc_ts") >= F.lit(tombstone_retention_ts))
+                    )
+                hot_base, _ = self._write_bucketed_base(
+                    merged_hot, snap, nb, "compact",
+                    approx_bytes=self._approx_input_bytes(snap, hot),
+                )
+            if cold:
+                # residual write: no shuffle (the dedup agg already placed
+                # rows); bkt+url sort within tasks so the bkt IN filter on
+                # future reads prunes at row-group granularity
+                rel_dir = f"data/resid_{uuid.uuid4().hex[:8]}"
+                dedup_latest(
+                    delta.filter(~F.col("bkt").isin(hot))
+                ).sortWithinPartitions("bkt", "url").write.mode(
+                    "overwrite"
+                ).parquet(os.path.join(self.path, rel_dir))
+                res_files, res_rows, res_bytes = self._list_files(rel_dir)
+                res_stats = self._maybe_stats(res_files)
         finally:
-            delta.unpersist()
+            if read_twice:
+                delta.unpersist()
         new_delta = (
             {
                 "files": res_files,
@@ -575,10 +492,6 @@ class CompactionMixin:
         }
         new_base.update(hot_base)
         total_rows = sum(int(e.get("rows") or 0) for e in new_base.values())
-        res_bytes = sum(
-            os.path.getsize(os.path.join(self.path, f))
-            for f in res_files if os.path.exists(os.path.join(self.path, f))
-        )
         metrics = {
             "compaction": True,
             "partial": True,

@@ -351,7 +351,7 @@ class ScanPlanMixin:
                 available |= fe
         # empty-batch epochs commit no delta group; they are committed but
         # contribute no rows and must not count as "compacted away"
-        folded = wanted - available - self._empty_epochs()
+        folded = wanted - available - self._empty_epochs(snap)
         if folded:
             raise ValueError(
                 f"epochs {sorted(folded)} were compacted into the base — "
@@ -520,22 +520,11 @@ class ScanPlanMixin:
         self.maybe_compact()
         return out
 
-    def _empty_epochs(self) -> set[int]:
+    def _empty_epochs(self, snap: dict | None = None) -> set[int]:
         """Epochs committed with empty batches (no delta group ever
-        existed) — recorded in each snapshot's commit metrics."""
-        out: set[int] = set()
-        for fn in self._snapshot_files():
-            try:
-                m = self.snapshot_at(int(fn[1:9])).get("metrics") or {}
-            except (OSError, ValueError, KeyError):
-                continue
-            if m.get("empty_batch") and m.get("epoch_id") is not None:
-                out.add(int(m["epoch_id"]))
-            # fast_forward carries adopted empty epochs as a list (the
-            # branch's per-epoch snapshots are not in this ref's dir)
-            out |= {int(e) for e in m.get("empty_epochs", ())}
-        # a rollback can un-commit an epoch whose original (historical)
-        # commit was empty — history says "was empty once", the CURRENT
-        # snapshot says whether it counts
-        return out & self.committed_epochs()
+        existed) as of ``snap`` (default: the current snapshot). Every
+        snapshot carries the list, like ``committed_epochs``, so it
+        survives expire_snapshots, rollback and fast_forward."""
+        snap = snap or self.current_snapshot()
+        return {int(e) for e in snap.get("empty_epochs", ())}
 

@@ -43,6 +43,36 @@ def test_rss_and_atom_normalize(spark):
     assert a1.pub_ts == dt.datetime(2026, 3, 2, 10, 20, 31)
 
 
+def test_zone_offsets_normalize_to_utc(spark):
+    """Numeric RSS offsets, an RFC 822 zone name and an Atom offset all
+    land as UTC instants."""
+    rss = (
+        "<rss><channel>"
+        "<item><guid>ist</guid>"
+        "<pubDate>Mon, 02 Mar 2026 10:20:30 +0530</pubDate></item>"
+        "<item><guid>pst</guid>"
+        "<pubDate>Mon, 02 Mar 2026 10:20:30 -0800</pubDate></item>"
+        "<item><guid>est</guid>"
+        "<pubDate>Mon, 2 Mar 2026 10:20:30 EST</pubDate></item>"
+        "</channel></rss>"
+    )
+    atom = (
+        "<feed><entry><id>cest</id>"
+        "<updated>2026-03-02T10:20:31+02:00</updated></entry></feed>"
+    )
+    df = spark.createDataFrame([(rss,), (atom,)], "doc string")
+    got = {
+        r.guid: r.pub_ts
+        for r in parse_feed_column(df, F.col("doc")).collect()
+    }
+    assert got == {
+        "ist": dt.datetime(2026, 3, 2, 4, 50, 30),
+        "pst": dt.datetime(2026, 3, 2, 18, 20, 30),
+        "est": dt.datetime(2026, 3, 2, 15, 20, 30),
+        "cest": dt.datetime(2026, 3, 2, 8, 20, 31),
+    }
+
+
 def test_atom_text_link_fallback(spark):
     doc = (
         "<feed><entry><id>a2</id><title>t</title>"

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from embulk_spark.sources.events import change_stream
 from embulk_spark.streaming.lake import ParquetLakeTable
-from embulk_spark.streaming.replay import replay_batches
+from embulk_spark.streaming.replay import apply_epoch, replay_batches
 
 
 def _replayed_table(spark, path, n_epochs=3):
@@ -71,6 +71,21 @@ def test_expire_snapshots_then_cleanup(spark, tmp_path):
     # the pre-compaction delta files are gone, current state intact
     assert removed["orphans_removed"] > 0
     assert table.published().count() == before
+
+
+def test_empty_epoch_survives_snapshot_expiry(spark, tmp_path):
+    """An epoch committed empty stays "empty", not "compacted", once the
+    snapshot that committed it expires: the set rides every snapshot."""
+    events = change_stream(spark, 300, 60, 2, num_partitions=2)
+    table = ParquetLakeTable(spark, str(tmp_path / "t"), n_buckets=2)
+    apply_epoch(table, events.filter("epoch = 0"), 0)
+    apply_epoch(table, events.limit(0), 1)
+    apply_epoch(table, events.filter("epoch = 1"), 2)
+    table.expire_snapshots(keep_last=1)
+    assert len(table._snapshot_files()) == 1
+    assert table.epoch_delta_paths(1) == []
+    assert table.changes_between(0, 2).count() > 0
+    assert table._empty_epochs() == {1}
 
 
 def test_concurrent_handles_never_lose_commits(spark, tmp_path):

@@ -9,6 +9,8 @@ bound is ours — at 10^10 events the base cannot be rewritten per fold."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -62,6 +64,39 @@ def test_partial_fold_preserves_state_and_cold_files(spark, tmp_path):
     hot = table.read(buckets=[0, 1])
     assert hot.count() == hot.select("url").distinct().count()
     # and the user-facing state is unchanged
+    assert {(r.url, r.seq) for r in table.published().collect()} == want
+
+
+@pytest.fixture(scope="module")
+def folded(spark, tmp_path_factory):
+    """A table whose pending epochs went through one all-bucket fold."""
+    table, _ = _table(spark, str(tmp_path_factory.mktemp("folded") / "t"))
+    want = {(r.url, r.seq) for r in table.published().collect()}
+    return table, table.compact(), want
+
+
+def test_all_bucket_fold_writes_no_residual(folded):
+    table, out, want = folded
+    assert out["buckets_folded"] == [0, 1, 2, 3]
+    assert out["residual_rows"] == 0 and out["deltas_folded"] == 3
+    assert table.current_snapshot()["deltas"] == []
+    data = os.listdir(os.path.join(table.path, "data"))
+    assert not [d for d in data if d.startswith("resid_")]
+    assert {(r.url, r.seq) for r in table.published().collect()} == want
+
+
+def test_fold_without_deltas_relays_out_base(folded):
+    """compact() on a fully compacted table still rewrites the base, so
+    a new target_file_bytes takes effect."""
+    table, _, want = folded
+    before = [f for e in table.current_snapshot()["base"].values()
+              for f in e["files"]]
+    table.set_properties(target_file_bytes=4 * 1024)
+    out = table.compact()
+    assert out["deltas_folded"] == 0 and not out.get("noop")
+    after = [f for e in table.current_snapshot()["base"].values()
+             for f in e["files"]]
+    assert len(after) > len(before) and not set(after) & set(before)
     assert {(r.url, r.seq) for r in table.published().collect()} == want
 
 
@@ -380,7 +415,7 @@ def test_concurrent_epoch_survives_partial_compact(spark, tmp_path):
     apply_epoch(table, late, 7)
     want = {(r.url, r.seq) for r in table.published().collect()}
 
-    out = table._compact_once(None, [0, 1], from_snap=snap)
+    out = table._fold(snap, [0, 1])
     assert out["partial"]
     snap2 = table.current_snapshot()
     assert any(d.get("epoch_id") == 7 for d in snap2["deltas"])
